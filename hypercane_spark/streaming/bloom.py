@@ -216,8 +216,8 @@ class ShardedBloom:
         self.paths = paths
         self.version = version
         self.compact_after = compact_after
-        # physical binding (parquet delta log by default; Iceberg via
-        # streaming/storage.py) — all filter IO routes through it
+        # physical binding (streaming/storage.py; parquet delta log by
+        # default) — all filter IO routes through it
         self.store = store or DEFAULT_STORE
 
     def unpersist(self) -> None:

@@ -1,9 +1,9 @@
 """DataFrame-driven crawl frontier — the north_rule centerpiece.
 
-Replaces the reference's sequential Scrapy TimeMap walk
-(/root/reference/hypercane/identify/archivecrawl.py:103-138: a single
-process BFS with an O(n) list seen-set) with an iterative-batch scheduler
-where every round is one declarative DataFrame job:
+Replaces Hypercane's sequential Scrapy TimeMap walk
+(``identify/archivecrawl.py``: a single-process BFS with an O(n) list
+seen-set) with an iterative-batch scheduler where every round is one
+declarative DataFrame job:
 
     frontier ──anti-join seen (bloom prefilter + exact backstop)
             ──robots gate (broadcast dim join)
@@ -15,6 +15,12 @@ where every round is one declarative DataFrame job:
             ──dedup vs seen ∪ selected → this round's LINK DELTA, appended
               to the frontier log; the next round's frontier is
               merge-on-read over the log (seed snapshot ∪ deltas)
+
+``CrawlEngine.run`` is a loop over four round phases — start (resume or
+seed), plan (dedup + schedule), fetch, commit (links, checkpoint, filter
+update, compaction) — and the round state always lives in a
+``RoundCheckpoint``: the given ``checkpoint_dir``, or a temp dir that is
+removed at interpreter exit.
 
 Determinism contract (BASELINE crawl-order fidelity): the global pop order
 is (round asc, priority desc, urim asc) under per-host budget B and depth
@@ -41,10 +47,16 @@ Scale notes (10^10-URL design):
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 import time
+import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hypercane_spark.functions.urls import surt_key
@@ -60,7 +72,7 @@ from hypercane_spark.streaming.bloom import (
     sharded_bloom_might_contain,
     sharded_bloom_or_update,
 )
-from hypercane_spark.streaming.checkpoint import RoundCheckpoint
+from hypercane_spark.streaming.checkpoint import RoundCheckpoint, merge_discoveries
 from hypercane_spark.streaming.robots import robots_gate
 
 FRONTIER_SCHEMA = (
@@ -107,8 +119,8 @@ class CrawlConfig:
     # size-based engine auto-select as kmeans in plans/dsa.py).
     bloom_shards: int | None = None
     cuckoo_capacity: int = 1 << 18
-    # every K checkpointed rounds, fold the delta chain into full
-    # frontier/seen snapshots and prune the subsumed delta dirs
+    # every K rounds, fold the delta chain into full frontier/seen
+    # snapshots and prune the subsumed delta dirs
     # (RoundCheckpoint.compact): bounds resume-scan file count on long
     # crawls while keeping per-round writes O(new state). None = never.
     compact_every: int | None = None
@@ -121,19 +133,30 @@ class CrawlConfig:
 class RoundMetrics:
     round: int = 0
     candidates: int = 0
-    allowed: int = 0
-    # `selected` is measured as the FETCHED row count (selected ⊆ web ⇒
-    # equal for link-derived rows; may undercount when user seeds miss the
-    # web table or error rows are skipped) — `fetched` is the honest alias
-    selected: int = 0
     fetched: int = 0
-    new_links: int = 0
     seen_size: int = 0
-    # Spark jobs triggered this round (statusTracker delta) — the per-round
-    # driver fixed cost is jobs × (scheduling + commit latency), so this is
-    # the number to drive DOWN; see BENCH.md round-5 jobs/round table.
+    # Spark jobs triggered this round in the default job group — the
+    # per-round driver fixed cost is jobs × (scheduling + commit latency),
+    # so this is the number to drive DOWN; see BENCH.md round-5 jobs/round
+    # table.
     jobs: int = 0
     timings: dict = field(default_factory=dict)
+
+
+def _temp_checkpoint_dir() -> str:
+    """A checkpoint dir for an engine built without one. It outlives the
+    engine — the DataFrame ``run()`` returns reads its parquet — so it is
+    removed at interpreter exit, not when the engine is collected."""
+    d = tempfile.mkdtemp(prefix="crawl-ckpt-")
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
+def _last_job_id(tracker) -> int:
+    """Largest job id in the default group. Job ids grow monotonically and
+    Spark trims its bounded job history oldest-first, so the jobs issued
+    after this point are exactly the retained ids above it."""
+    return max(tracker.getJobIdsForGroup(None), default=-1)
 
 
 class CrawlEngine:
@@ -157,7 +180,7 @@ class CrawlEngine:
         self.robots = robots
         self.images = images
         self.cfg = config or CrawlConfig()
-        self.ckpt = RoundCheckpoint(checkpoint_dir) if checkpoint_dir else None
+        self.ckpt = RoundCheckpoint(checkpoint_dir or _temp_checkpoint_dir())
         # errors_dir switches the fetch stage to the reference's skip-not-
         # abort contract (errors.py:5-38): a payload that fails to decode/
         # verify is recorded (uri, stage, traceback) and dropped; the crawl
@@ -180,13 +203,9 @@ class CrawlEngine:
         # (shard, bits) table; or_update unpersists the stale one per round
         self._sharded = None
         # monolithic-path broadcast handles created this round; destroyed
-        # (ckpt mode) or unpersisted (ckpt-less) at round end so filter
-        # broadcasts never accumulate across a long crawl
+        # at round end so filter broadcasts never accumulate across a long
+        # crawl
         self._stale_broadcasts: list = []
-        # ckpt-less merge-on-read delta log: seed part + per-round link
-        # parts, each localCheckpointed (with a checkpoint dir the log is
-        # the on-disk delta files instead)
-        self._parts: list[DataFrame] = []
 
     # -------------------------------------------------------------- seeds
 
@@ -215,59 +234,21 @@ class CrawlEngine:
         """bloom_bits is the TOTAL filter size; each shard owns its slice."""
         return max(64, self.cfg.bloom_bits // self._shards())
 
-    def _filter_root(self) -> str | None:
+    def _filter_root(self) -> str:
         """Where the sharded filter's versioned parquet lives: next to the
-        checkpoint (shared storage on a cluster) when one exists, else a
-        temp dir (local mode). None → build_sharded_bloom makes a tempdir."""
-        if self.ckpt:
-            import os
-
-            return os.path.join(self.ckpt.base, "seen_filter")
-        return None
+        checkpoint (shared storage on a cluster)."""
+        return os.path.join(self.ckpt.base, "seen_filter")
 
     def _drop_stale_broadcasts(self) -> None:
-        """Free the monolithic-path filter broadcasts created this round.
-        By round end every consumer plan has been evaluated (checkpoint
-        mode flushes all round state to disk → destroy; ckpt-less mode
-        keeps persisted fetched parts whose recompute could still need the
-        handle → unpersist only, which frees executor copies but keeps the
-        handle re-shippable)."""
+        """Destroy the monolithic-path filter broadcasts created this
+        round. By round end every consumer plan has been evaluated and all
+        round state is on disk, so no recompute can need the handles."""
         for b in self._stale_broadcasts:
             try:
-                if self.ckpt:
-                    b.destroy()
-                else:
-                    b.unpersist(blocking=False)
+                b.destroy()
             except Exception:
                 pass
         self._stale_broadcasts.clear()
-
-    def _union_parts(self) -> DataFrame:
-        """ckpt-less frontier log: the in-memory delta parts (seed
-        snapshot + per-round link deltas, each localCheckpointed)."""
-        raw = self._parts[0]
-        for p in self._parts[1:]:
-            raw = raw.unionByName(p)
-        return raw
-
-    @staticmethod
-    def _merge_candidates(cand: DataFrame) -> DataFrame:
-        """Fold duplicate discoveries of a urim across the (already
-        seen-filtered) log with the engine's associative merge aggregate.
-        Runs AFTER _not_seen by design — a manual pushdown of the seen
-        anti-join through the aggregate (legal because seen is keyed on
-        surt(urim): a urim's copies are all-seen or all-new), so rows
-        already fetched never enter the merge shuffle. At steady state
-        most log rows ARE seen — without the pushdown the merge would
-        shuffle the whole log every round."""
-        return cand.groupBy("urim").agg(
-            F.first("urir").alias("urir"),
-            F.first("host").alias("host"),
-            F.max("priority").alias("priority"),
-            F.min("depth").alias("depth"),
-            F.min("discovered_from").alias("discovered_from"),
-            F.first("__surt").alias("__surt"),
-        )
 
     # -------------------------------------------------------------- round
 
@@ -318,12 +299,11 @@ class CrawlEngine:
         )
         return sure_new.unionByName(checked)
 
-    def _politeness_select(
-        self, allowed: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
-        """→ (selected, deferred). Per-host budget window; the SQL-oracle-
-        checkable core of the scheduler (see entry_queries politeness
-        query).
+    def _politeness_select(self, allowed: DataFrame) -> DataFrame:
+        """→ selected. Per-host budget window; the SQL-oracle-checkable core
+        of the scheduler (see entry_queries politeness query). Rows beyond
+        the budget need no explicit carry: they stay in the delta log and
+        re-surface from the next round's merge-on-read scan.
 
         Skew: a Zipf-hot host can hold a large share of the frontier, and a
         single ``partitionBy(host)`` window serializes that whole host into
@@ -335,8 +315,6 @@ class CrawlEngine:
         so phase 2's authoritative per-host window sees ≤ budget·S rows per
         host instead of the full queue. Same selected set, same order:
         any row in the true per-host top-budget is in its salt's top-budget.
-        Deferred rows (beyond budget) skip phase 1 by construction — they
-        are recovered by anti-joining selected against allowed.
 
         With ``cfg.round_seconds`` set and a ``crawl_delay`` column present
         (robots_gate carries it), the per-host cap becomes
@@ -362,25 +340,17 @@ class CrawlEngine:
             w1 = Window.partitionBy("host", "__salt").orderBy(
                 F.col("priority").desc(), F.col("urim").asc()
             )
-            pruned = (
+            allowed = (
                 allowed.withColumn("__salt", salt)
                 .withColumn("__rn1", F.row_number().over(w1))
                 .where(F.col("__rn1") <= budget)
                 .drop("__rn1", "__salt")
             )
-            selected = (
-                pruned.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= budget)
-                .drop("__rn")
-            )
-            deferred = allowed.join(
-                selected.select("urim"), on="urim", how="left_anti"
-            )
-            return selected, deferred
-        ranked = allowed.withColumn("__rn", F.row_number().over(w))
-        selected = ranked.where(F.col("__rn") <= budget).drop("__rn")
-        deferred = ranked.where(F.col("__rn") > budget).drop("__rn")
-        return selected, deferred
+        return (
+            allowed.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") <= budget)
+            .drop("__rn")
+        )
 
     def _fetch(self, selected: DataFrame, rnd: int) -> DataFrame:
         fetched = selected.join(
@@ -438,9 +408,10 @@ class CrawlEngine:
             .withColumn("partition_id", F.spark_partition_id())
         )
 
-    def _extract_links(
-        self, fetched: DataFrame, seen: DataFrame, rnd: int
-    ) -> DataFrame:
+    def _extract_links(self, fetched: DataFrame, seen: DataFrame) -> DataFrame:
+        """This round's link delta: outlinks within the depth limit, in the
+        frontier column order of ``seed_frontier``, duplicate discoveries
+        folded by ``merge_discoveries``, already-seen urims dropped."""
         links = (
             fetched.select(
                 F.col("urim").alias("discovered_from"),
@@ -449,25 +420,244 @@ class CrawlEngine:
             )
             .where(F.col("__pd") + 1 <= self.cfg.max_depth)
             .join(self.web.select("urim", "urir", "host", "priority"), "urim")
-            .withColumn("depth", (F.col("__pd") + 1).cast("int"))
-            .drop("__pd")
-        )
-        # collapse duplicate discoveries: max priority, min discoverer
-        links = (
-            links.withColumn("__surt", surt_key(F.col("urim")))
-            .groupBy("urim")
-            .agg(
-                F.first("urir").alias("urir"),
-                F.first("host").alias("host"),
-                F.max("priority").alias("priority"),
-                F.min("depth").alias("depth"),
-                F.min("discovered_from").alias("discovered_from"),
-                F.first("__surt").alias("__surt"),
+            .select(
+                "urim", "urir", "host", "priority",
+                (F.col("__pd") + 1).cast("int").alias("depth"),
+                "discovered_from",
+                surt_key(F.col("urim")).alias("__surt"),
             )
         )
-        # drop already-seen
+        links = merge_discoveries(links)
         links = links.join(seen, links["__surt"] == seen["surt"], "left_anti")
         return links.drop("__surt")
+
+    def _start_phase(self, seeds: DataFrame, resume: bool) -> tuple[int, DataFrame]:
+        """→ (first round, seen). Resume continues after the latest complete
+        checkpointed round and rebuilds the seen-filter from its seen set;
+        otherwise the seed frontier is snapshotted and filters reset."""
+        rounds = self.ckpt.rounds() if resume else []
+        if rounds:
+            seen = self.ckpt.read_seen(self.spark, rounds[-1])
+            if self.cfg.use_bloom and not seen.isEmpty():
+                self._rebuild_filter(seen)
+            return rounds[-1] + 1, seen
+        # one-time seed snapshot — the 'round -1' frontier delta; every
+        # round's merge-on-read scan starts from it
+        self.ckpt.write_seeds(self.seed_frontier(seeds))
+        # fresh run: no filter may carry over from a previous run() on this
+        # engine — a stale prefilter covering old keys is harmless for
+        # bloom (false positives only) but the sharded handle would leak
+        # its files and a stale cuckoo could give false negatives on a
+        # reseeded crawl
+        self._bloom = None
+        if self._sharded is not None:
+            self._sharded.unpersist()
+            self._sharded = None
+        self._cuckoo = None
+        return 0, self.empty_seen()
+
+    def _rebuild_filter(self, seen: DataFrame) -> None:
+        """The prefilter must cover the ENTIRE checkpointed seen set — a
+        fresh filter holding only post-resume keys would test pre-resume
+        URLs "sure new" and re-fetch them (skipping the exact backstop)."""
+        if self.cfg.seen_filter == "cuckoo":
+            self._cuckoo = build_cuckoo(
+                seen, "surt", capacity=self.cfg.cuckoo_capacity
+            )
+        elif self._shards() > 0:
+            self._sharded = build_sharded_bloom(
+                seen,
+                "surt",
+                self._shards(),
+                self._bits_per_shard(),
+                self.cfg.bloom_hashes,
+                root=self._filter_root(),
+            )
+        else:
+            self._bloom = build_bloom(
+                seen, "surt", self.cfg.bloom_bits, self.cfg.bloom_hashes
+            )
+
+    def _plan_phase(self, rnd: int, seen: DataFrame, m: RoundMetrics) -> DataFrame:
+        """Dedup + schedule → this round's selected rows (persisted).
+
+        MERGE-ON-READ: the frontier is never materialized as a table. Each
+        round reconstructs it lazily from the append-only delta log — seed
+        snapshot ∪ per-round link deltas — seen-filtered row-wise (bloom/
+        cuckoo prefilter + exact anti-join backstop), then folded by
+        ``merge_discoveries``. Filtering first is a manual pushdown of the
+        seen anti-join through the aggregate (legal because seen is keyed
+        on surt(urim): a urim's copies are all-seen or all-new), so rows
+        already fetched never enter the merge shuffle — at steady state
+        most log rows ARE seen. The plan is constant-depth whatever the
+        round count (a multi-path file scan + one shuffle).
+
+        The seen-dedup is left lazy: its work folds into the fetch job.
+        An empty selection subsumes the candidates == 0 stop (selected ⊆
+        candidates, and a nonzero robots-allowed set always selects ≥ 1
+        under budget ≥ 1), so no separate count action is needed."""
+        t0 = time.time()
+        log = self.ckpt.read_frontier_log(self.spark, rnd - 1)
+        cand = merge_discoveries(self._not_seen(log, seen))
+        if self.cfg.collect_metrics:
+            m.candidates = cand.count()
+        m.timings["dedup"] = time.time() - t0
+
+        t = time.time()
+        # crawl_delay must survive until AFTER _politeness_select — the
+        # round_seconds cap reads it there (dropping it here made the
+        # per-host crawl-delay budget a silent no-op)
+        allowed = (
+            robots_gate(cand, self.robots, url="urir", host="host")
+            if self.robots is not None
+            else cand
+        )
+        selected = self._politeness_select(allowed)
+        if "crawl_delay" in selected.columns:
+            selected = selected.drop("crawl_delay")
+        selected = selected.persist()
+        m.timings["schedule"] = time.time() - t
+        return selected
+
+    def _fetch_phase(
+        self, rnd: int, selected: DataFrame, m: RoundMetrics
+    ) -> DataFrame:
+        """Fetch + verify runs ONCE, its payload rows land directly in the
+        round's ``fetched.parquet``, and the returned in-flight view is the
+        disk-backed read — downstream link extraction prunes the `bytes`
+        column at the scan, so ~20 KB/row of pixels never sits in executor
+        memory (persisting them as JVM objects caused round-0 GC storms).
+
+        The fetched count rides the write job as an observe() metric — no
+        separate count job. selected ⊆ web, so |fetched| == |selected|
+        (inner join on urim; payload join is left)."""
+        t = time.time()
+        fetched_full = self._fetch(selected.drop("__surt"), rnd)
+        obs = Observation()
+        obs_metrics = [F.count(F.lit(1)).alias("n")]
+        if "fetch_err" in fetched_full.columns:
+            obs_metrics.append(
+                F.sum(F.col("fetch_err").isNotNull().cast("long")).alias("n_err")
+            )
+        self.ckpt.write_fetched(rnd, fetched_full.observe(obs, *obs_metrics))
+        fetched = self.ckpt.read_fetched(self.spark, rnd)
+        if self.errors is not None and "fetch_err" in fetched.columns:
+            # skip-not-abort: poisoned payloads land in the errors table
+            # and drop out of the crawl output; their surts are still
+            # marked seen (via selected) so they are never retried — the
+            # reference's record-and-skip contract.
+            bad = fetched.where(F.col("fetch_err").isNotNull())
+            self.errors.record(
+                bad.select(
+                    F.col("urim").alias("uri"),
+                    F.lit("fetch").alias("stage"),
+                    F.col("fetch_err").alias("traceback"),
+                )
+            )
+            fetched = fetched.where(F.col("fetch_err").isNull()).drop(
+                "fetch_err"
+            )
+        row = obs.get  # dict of observed metrics
+        n_err = int(row.get("n_err") or 0) if self.errors else 0
+        m.fetched = int(row["n"]) - n_err
+        m.timings["fetch"] = time.time() - t
+        return fetched
+
+    def _update_filter(self, selected: DataFrame) -> None:
+        """O(selected) incremental seen-filter update."""
+        if not self.cfg.use_bloom:
+            return
+        keys = selected.select(F.col("__surt").alias("surt"))
+        if self.cfg.seen_filter == "cuckoo":
+            # (fp, bucket) pairs computed partition-wise (JVM hash +
+            # vectorized derive), one batch insert on the driver — no
+            # per-row Python (mirrors the bloom's per-partition build)
+            if self._cuckoo is None:
+                self._cuckoo = CuckooFilter(capacity=self.cfg.cuckoo_capacity)
+            if not self._cuckoo.full and not cuckoo_add_df(
+                self._cuckoo, keys, "surt"
+            ):
+                warnings.warn(
+                    "cuckoo seen-filter is full; disabling the prefilter "
+                    "(exact anti-join only) for the rest of the crawl — "
+                    "raise cuckoo_capacity",
+                    stacklevel=2,
+                )
+        elif self._shards() > 0:
+            # incremental OR into the distributed (shard, bits) table; the
+            # stale table is unpersisted inside or_update so executor
+            # storage holds exactly one filter
+            if self._sharded is None:
+                self._sharded = build_sharded_bloom(
+                    keys,
+                    "surt",
+                    self._shards(),
+                    self._bits_per_shard(),
+                    self.cfg.bloom_hashes,
+                    root=self._filter_root(),
+                )
+            else:
+                self._sharded = sharded_bloom_or_update(
+                    self._sharded, keys, "surt"
+                )
+        else:
+            # OR-composed into the running filter
+            self._bloom = bloom_or(
+                self._bloom,
+                build_bloom(
+                    keys, "surt", self.cfg.bloom_bits, self.cfg.bloom_hashes
+                ),
+            )
+
+    def _commit_phase(
+        self,
+        rnd: int,
+        selected: DataFrame,
+        fetched: DataFrame,
+        seen: DataFrame,
+        m: RoundMetrics,
+    ) -> DataFrame:
+        """Links + checkpoint → the seen set after round ``rnd``.
+
+        Durable state is APPEND-ONLY on both axes: this round's newly-seen
+        surts AND its newly-discovered links (the frontier delta). The
+        merged frontier is never written (or cached) anywhere; the next
+        round's merge-on-read scan consumes these files directly."""
+        t = time.time()
+        # this round's seen delta is the selected surts (distinct within
+        # the round; disjoint from `seen` by construction — every candidate
+        # passed the seen anti-join, and the bloom/cuckoo prefilters have
+        # no false negatives on the paths that skip it)
+        delta = selected.select(F.col("__surt").alias("surt")).distinct()
+        links = self._extract_links(fetched, seen.unionByName(delta))
+        m.timings["links"] = time.time() - t
+
+        t = time.time()
+        # The filter update reads only `selected` (persisted) and is
+        # consumed no earlier than next round's _not_seen, while the writes
+        # read fetched/seen — independent inputs, so they run concurrently
+        # and their job latencies overlap.
+        with ThreadPoolExecutor(max_workers=2) as ex:
+            fut_f = ex.submit(self._update_filter, selected)
+            fut_w = ex.submit(
+                self.ckpt.write,
+                rnd,
+                links,
+                delta,
+                {"candidates": m.candidates, "fetched": m.fetched, "timings": m.timings},
+            )
+            fut_f.result()
+            fut_w.result()
+        if self.cfg.compact_every and (rnd + 1) % self.cfg.compact_every == 0:
+            # fold the delta chain ≤ rnd into full snapshots and prune the
+            # subsumed delta dirs. Safe in-loop: every state DataFrame is
+            # rebuilt from _axis_paths at its next use, which sees the
+            # snapshot.
+            self.ckpt.compact(self.spark, rnd, prune=True)
+        # constant-depth file-backed seen view (no union lineage)
+        seen = self.ckpt.read_seen(self.spark, rnd)
+        m.timings["checkpoint"] = time.time() - t
+        return seen
 
     def run(
         self,
@@ -475,334 +665,43 @@ class CrawlEngine:
         resume: bool = False,
     ) -> DataFrame:
         """Run the crawl; returns the fetched-mementos table (all rounds).
-        With a checkpoint dir, each round persists frontier+seen+fetched and
-        ``resume=True`` continues from the latest complete round."""
-        spark = self.spark
-        start_round = 0
-        if resume and self.ckpt and self.ckpt.rounds():
-            start_round = self.ckpt.rounds()[-1]
-            seen = self.ckpt.read_seen(spark, start_round)
-            start_round += 1
-            if self.cfg.use_bloom and not seen.isEmpty():
-                if self.cfg.seen_filter == "cuckoo":
-                    # the prefilter must cover the ENTIRE checkpointed seen
-                    # set — a fresh filter holding only post-resume keys
-                    # would test pre-resume URLs "sure new" and re-fetch
-                    # them (skipping the exact backstop)
-                    self._cuckoo = build_cuckoo(
-                        seen, "surt", capacity=self.cfg.cuckoo_capacity
-                    )
-                elif self._shards() > 0:
-                    self._sharded = build_sharded_bloom(
-                        seen,
-                        "surt",
-                        self._shards(),
-                        self._bits_per_shard(),
-                        self.cfg.bloom_hashes,
-                        root=self._filter_root(),
-                    )
-                else:
-                    self._bloom = build_bloom(
-                        seen, "surt", self.cfg.bloom_bits, self.cfg.bloom_hashes
-                    )
-        else:
-            if self.ckpt:
-                # one-time seed snapshot — the 'round -1' frontier delta;
-                # every round's merge-on-read scan starts from it
-                self.ckpt.write_seeds(self.seed_frontier(seeds))
-            else:
-                self._parts = [self.seed_frontier(seeds).localCheckpoint()]
-            seen = self.empty_seen()
-            # fresh run: no filter may carry over from a previous run()
-            # on this engine — a stale prefilter covering old keys is
-            # harmless for bloom (false positives only) but the sharded
-            # handle would leak its files and a stale cuckoo could give
-            # false negatives on a reseeded crawl
-            self._bloom = None
-            if self._sharded is not None:
-                self._sharded.unpersist()
-                self._sharded = None
-            self._cuckoo = None
-
+        Each round persists its frontier/seen deltas and fetched rows to the
+        checkpoint; ``resume=True`` continues from the latest complete
+        round."""
+        start_round, seen = self._start_phase(seeds, resume)
         fetched_parts: list[DataFrame] = []
-        tracker = spark.sparkContext.statusTracker()
+        tracker = self.spark.sparkContext.statusTracker()
         for rnd in range(start_round, self.cfg.max_rounds):
             m = RoundMetrics(round=rnd)
-            # jobs/round accounting: the engine never sets job groups, so
-            # every job (main thread AND checkpoint writer threads) lands in
-            # the default group — the before/after delta is this round's
-            # job count, the per-round driver fixed-cost driver.
-            jobs_before = len(tracker.getJobIdsForGroup(None))
-            t0 = time.time()
-
-            # MERGE-ON-READ: the frontier is never materialized as a
-            # table. Each round reconstructs it lazily from the append-only
-            # delta log — seed snapshot ∪ per-round link deltas (files
-            # under the checkpoint; localCheckpointed parts without one) —
-            # seen-filtered row-wise, then folded by one associative
-            # aggregate (filter first, so fetched rows skip the shuffle). The
-            # plan is constant-depth whatever the round count (a multi-path
-            # file scan + one shuffle), so no per-round lineage truncation
-            # or O(|frontier|) store exists at all. Measured against both
-            # prior shapes (full-frontier parquet rewrite; per-round
-            # localCheckpoint) this deletes one whole O(|frontier|)
-            # materialization job per round, and it is the only shape that
-            # survives a 10^10-row frontier — rewriting or caching the
-            # frontier per round is O(F)·rounds storage traffic, the delta
-            # log is O(new links). Iceberg analog: merge-on-read table,
-            # compact() = rewrite_data_files.
-            #
-            # The seen-dedup is left lazy: its work folds into the
-            # schedule/fetch jobs below. selected == 0 subsumes the
-            # candidates == 0 stop (selected ⊆ candidates, and a nonzero
-            # robots-allowed set always selects ≥ 1 under budget ≥ 1), so
-            # no separate count action is needed per round.
-            log = (
-                self.ckpt.read_frontier_log(spark, rnd - 1)
-                if self.ckpt
-                else self._union_parts()
-            )
-            # seen filter FIRST (row-wise bloom/cuckoo prefilter + exact
-            # anti-join backstop), merge aggregate SECOND: fetched rows
-            # stay out of the merge shuffle (see _merge_candidates)
-            cand = self._merge_candidates(self._not_seen(log, seen))
-            if self.cfg.collect_metrics:
-                m.candidates = cand.count()
-            m.timings["dedup"] = time.time() - t0
-
-            t = time.time()
-            # crawl_delay must survive until AFTER _politeness_select — the
-            # round_seconds cap reads it there (dropping it here made the
-            # per-host crawl-delay budget a silent no-op)
-            allowed = (
-                robots_gate(cand, self.robots, url="urir", host="host")
-                if self.robots is not None
-                else cand
-            )
-            # deferred rows need no explicit carry: anything discovered but
-            # not selected stays in the delta log and re-surfaces from the
-            # next round's merge-on-read scan
-            selected, _deferred = self._politeness_select(allowed)
-            if "crawl_delay" in selected.columns:
-                selected = selected.drop("crawl_delay")
-            selected = selected.persist()
-            m.timings["schedule"] = time.time() - t
-
-            t = time.time()
-            # The selected count rides the fetch job: selected ⊆ web, so
-            # |fetched| == |selected| (inner join on urim; payload join is
-            # left). One driver action fewer per round — at 10^10 scale the
-            # per-round driver round-trips ARE the iterative bottleneck.
-            fetched_full = self._fetch(selected.drop("__surt"), rnd)
-            obs = None
-            if self.ckpt:
-                # Production shape: fetch+verify runs ONCE, payload rows
-                # land directly in the round's columnar table, and the
-                # in-flight view is the disk-backed read — downstream link
-                # extraction prunes the `bytes` column at the scan, so
-                # ~20 KB/row of pixels never sits in executor memory
-                # (persisting them as JVM objects caused round-0 GC storms).
-                #
-                # The round's fetched count rides the write job as an
-                # observe() metric — the separate post-write count job was
-                # pure per-round fixed cost (parquet-stats scan, but still
-                # a scheduled job).
-                from pyspark.sql import Observation
-
-                obs = Observation()
-                obs_metrics = [F.count(F.lit(1)).alias("n")]
-                if "fetch_err" in fetched_full.columns:
-                    obs_metrics.append(
-                        F.sum(
-                            F.col("fetch_err").isNotNull().cast("long")
-                        ).alias("n_err")
-                    )
-                self.ckpt.write_fetched(
-                    rnd, fetched_full.observe(obs, *obs_metrics)
-                )
-                fetched = self.ckpt.read_fetched(spark, rnd)
-            else:
-                fetched = fetched_full.persist()
-            if self.errors is not None and "fetch_err" in fetched.columns:
-                # skip-not-abort: poisoned payloads land in the errors
-                # table and drop out of the crawl output; their surts are
-                # still marked seen (via selected) so they are never
-                # retried — the reference's record-and-skip contract.
-                bad = fetched.where(F.col("fetch_err").isNotNull())
-                self.errors.record(
-                    bad.select(
-                        F.col("urim").alias("uri"),
-                        F.lit("fetch").alias("stage"),
-                        F.col("fetch_err").alias("traceback"),
-                    )
-                )
-                fetched = fetched.where(F.col("fetch_err").isNull()).drop(
-                    "fetch_err"
-                )
-            if obs is not None:
-                row = obs.get  # dict of observed metrics
-                n_err = int(row.get("n_err") or 0) if self.errors else 0
-                m.selected = m.fetched = int(row["n"]) - n_err
-            else:
-                m.selected = m.fetched = fetched.count()
-            m.timings["fetch"] = time.time() - t
-            if m.selected == 0:
-                # |fetched| == |selected| only when selected ⊆ web (links
-                # are inner-joined to web; that invariant does NOT cover
-                # user-supplied seeds absent from the web table). Seeds that
-                # miss the web give selected > 0, fetched == 0 — those rows
-                # must still be marked seen and the deferred rows must keep
-                # crawling, so only a genuinely empty selection stops the
-                # engine. The isEmpty probe runs only on fetched==0 rounds.
-                if selected.isEmpty():
-                    selected.unpersist(blocking=False)
-                    if not self.ckpt:
-                        fetched.unpersist(blocking=False)
-                    break
-
-            t = time.time()
-
-            def _update_filter() -> None:
-                # O(selected) incremental seen-filter update. Runs
-                # CONCURRENTLY with the checkpoint delta writes below —
-                # the filter job reads only `selected` (persisted) and is
-                # consumed no earlier than next round's _not_seen, while
-                # the writes read fetched/seen — independent inputs, so
-                # overlapping them collapses two-plus sequential job
-                # latencies into one (per-round fixed-cost cut, round 5).
-                if self.cfg.use_bloom and self.cfg.seen_filter == "cuckoo":
-                    # (fp, bucket) pairs computed partition-wise (JVM hash
-                    # + vectorized derive), one batch insert on the driver
-                    # — no per-row Python (mirrors the bloom's
-                    # per-partition build)
-                    if self._cuckoo is None:
-                        self._cuckoo = CuckooFilter(
-                            capacity=self.cfg.cuckoo_capacity
-                        )
-                    if not self._cuckoo.full and not cuckoo_add_df(
-                        self._cuckoo,
-                        selected.select(F.col("__surt").alias("surt")),
-                        "surt",
-                    ):
-                        import warnings
-
-                        warnings.warn(
-                            "cuckoo seen-filter is full; disabling the "
-                            "prefilter (exact anti-join only) for the rest "
-                            "of the crawl — raise cuckoo_capacity",
-                            stacklevel=2,
-                        )
-                elif self.cfg.use_bloom and self._shards() > 0:
-                    # incremental OR into the distributed (shard, bits)
-                    # table; the stale table is unpersisted inside
-                    # or_update so executor storage holds exactly one
-                    # filter
-                    keys = selected.select(F.col("__surt").alias("surt"))
-                    if self._sharded is None:
-                        self._sharded = build_sharded_bloom(
-                            keys,
-                            "surt",
-                            self._shards(),
-                            self._bits_per_shard(),
-                            self.cfg.bloom_hashes,
-                            root=self._filter_root(),
-                        )
-                    else:
-                        self._sharded = sharded_bloom_or_update(
-                            self._sharded, keys, "surt"
-                        )
-                elif self.cfg.use_bloom:
-                    # OR-composed into the running filter
-                    self._bloom = bloom_or(
-                        self._bloom,
-                        build_bloom(
-                            selected.select(F.col("__surt").alias("surt")),
-                            "surt",
-                            self.cfg.bloom_bits,
-                            self.cfg.bloom_hashes,
-                        ),
-                    )
-
-            # Append-only seen semantics: this round's delta is the selected
-            # surts (distinct within the round; disjoint from `seen` by
-            # construction — every candidate passed the seen anti-join, and
-            # the bloom/cuckoo prefilters have no false negatives on the
-            # paths that skip it). The union IS the seen set; nothing is
-            # ever rewritten.
-            delta = selected.select(F.col("__surt").alias("surt")).distinct()
-            new_seen = seen.unionByName(delta)
-            links = self._extract_links(fetched, new_seen, rnd)
-            m.timings["links"] = time.time() - t
-
-            t = time.time()
-            from concurrent.futures import ThreadPoolExecutor
-
-            if self.ckpt:
-                # Durable state is APPEND-ONLY on both axes: this round's
-                # newly-seen surts AND this round's newly-discovered links
-                # (the frontier delta). Nothing else — the merged frontier
-                # is never written (or cached) anywhere; the next round's
-                # merge-on-read scan consumes these files directly. The
-                # filter update overlaps the writes (independent inputs,
-                # both joined before anything consumes either).
-                with ThreadPoolExecutor(max_workers=2) as ex:
-                    fut_f = ex.submit(_update_filter)
-                    fut_w = ex.submit(
-                        self.ckpt.write,
-                        rnd,
-                        links,
-                        delta,
-                        None,  # fetched already written at fetch time
-                        {
-                            "candidates": m.candidates,
-                            "selected": m.selected,
-                            "timings": m.timings,
-                        },
-                    )
-                    fut_f.result()
-                    fut_w.result()
-                if (
-                    self.cfg.compact_every
-                    and (rnd + 1) % self.cfg.compact_every == 0
-                ):
-                    # fold the delta chain ≤ rnd into full snapshots and
-                    # prune the subsumed delta dirs — bounds the per-round
-                    # multi-path scan's file count on long crawls. Safe
-                    # in-loop: every state DataFrame is rebuilt from
-                    # _axis_paths at its next use, which sees the snapshot.
-                    self.ckpt.compact(spark, rnd, prune=True)
-                # constant-depth file-backed seen view (no union lineage)
-                seen = self.ckpt.read_seen(spark, rnd)
-            else:
-                # ckpt-less mode: the delta log lives in cluster storage —
-                # localCheckpointed parts, same merge-on-read formula, the
-                # same three-way overlap
-                with ThreadPoolExecutor(max_workers=3) as ex:
-                    fut_f = ex.submit(_update_filter)
-                    fut_l = ex.submit(links.localCheckpoint)
-                    fut_d = ex.submit(delta.localCheckpoint)
-                    fut_f.result()
-                    self._parts.append(fut_l.result())
-                    seen = seen.unionByName(fut_d.result())
-            m.timings["checkpoint"] = time.time() - t
+            # jobs/round: the engine sets no job group, so every job (main
+            # thread AND writer threads) lands in the default group
+            last_job = _last_job_id(tracker)
+            selected = self._plan_phase(rnd, seen, m)
+            fetched = self._fetch_phase(rnd, selected, m)
+            # fetched == 0 with selected > 0 happens when user-supplied
+            # seeds miss the web table (or every payload errored): those
+            # rows must still be marked seen and the rest keep crawling,
+            # so only a genuinely empty selection stops the engine
+            if m.fetched == 0 and selected.isEmpty():
+                selected.unpersist(blocking=False)
+                break
+            seen = self._commit_phase(rnd, selected, fetched, seen, m)
             if self.cfg.collect_metrics:
                 m.seen_size = seen.count()
-            m.jobs = len(tracker.getJobIdsForGroup(None)) - jobs_before
-            m.new_links = 0
-            if m.selected:
+            m.jobs = sum(
+                j > last_job for j in tracker.getJobIdsForGroup(None)
+            )
+            if m.fetched:
                 fetched_parts.append(fetched)
-            elif not self.ckpt:
-                fetched.unpersist(blocking=False)  # empty seed-miss round
             self.metrics.append(m)
-            # round state now lives in the checkpoint (or the fetched
-            # cache); dropping the per-round selected cache keeps storage
-            # memory flat across max_rounds rounds
+            # round state now lives in the checkpoint; dropping the
+            # per-round selected cache keeps storage memory flat
             selected.unpersist(blocking=False)
             self._drop_stale_broadcasts()
 
         self._drop_stale_broadcasts()  # covers the break-on-empty path
         if not fetched_parts:
-            return spark.createDataFrame([], FRONTIER_SCHEMA + ", round int")
+            return self.spark.createDataFrame([], FRONTIER_SCHEMA + ", round int")
         out = fetched_parts[0]
         for p in fetched_parts[1:]:
             out = out.unionByName(p, allowMissingColumns=True)

@@ -403,7 +403,7 @@ def test_checkpoint_seen_deltas_union(spark, tmp_path):
             (u("c"), "rc", "h2", 1.0, 1, u("a")),
         ),
         spark.createDataFrame([(surt_key_py(u("a")),)], "surt string"),
-        None, {},
+        {},
     )
     # round 1: b+c fetched; b re-discovered at higher priority / deeper
     # depth (merge must keep max prio, min depth, min discovered_from),
@@ -417,7 +417,7 @@ def test_checkpoint_seen_deltas_union(spark, tmp_path):
         spark.createDataFrame(
             [(surt_key_py(u("b")),), (surt_key_py(u("c")),)], "surt string"
         ),
-        None, {},
+        {},
     )
     rnd, frontier, seen = ck.read(spark)
     assert rnd == 1
@@ -470,13 +470,13 @@ def test_checkpoint_compact_prune_and_continue(spark, tmp_path):
         0,
         fr((u("b"), "rb", "h1", 2.0, 1, u("a")),
            (u("c"), "rc", "h2", 1.0, 1, u("a"))),
-        surts("a"), None, {},
+        surts("a"), {},
     )
     ck.write(
         1,
         fr((u("b"), "rb", "h1", 3.0, 2, u("z")),
            (u("d"), "rd", "h2", 1.0, 2, u("c"))),
-        surts("b", "c"), None, {},
+        surts("b", "c"), {},
     )
     _, f_before, s_before = ck.read(spark)
     before = {
@@ -509,7 +509,7 @@ def test_checkpoint_compact_prune_and_continue(spark, tmp_path):
     ck.write(
         2,
         fr((u("e"), "re", "h1", 5.0, 3, u("d"))),
-        surts("d"), None, {},
+        surts("d"), {},
     )
     _, f2, s2 = ck.read(spark)
     assert {r["urim"] for r in f2.collect()} == {u("e")}
