@@ -11,7 +11,8 @@ Conventions that make the oracle comparison byte-stable:
   columns with arithmetic/string ops that have identical semantics in
   Spark SQL and DuckDB.
 
-The registry maps name → (spark_fn, oracle_sql | None). A None oracle marks
+The registry maps name → (spark_fn, oracle_sql | None), in registration
+order: the order is fixed by this module's code alone. A None oracle marks
 a genuinely non-SQL-expressible op (driver records a rows-only check).
 """
 
@@ -2805,50 +2806,3 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decontaminate(
         d, ev, shingle_n=3, min_overlaps=3
     ).select("doc_id")
-
-
-# ===================================================== registry ordering
-#
-# The external correctness driver pins the FIRST 50 registry entries each
-# round; tools/check_oracle.py covers the FULL registry every round. With
-# 80+ queries some necessarily sit outside the driver's window, so the
-# window is allocated by an explicit ROTATION policy (round 5 — replacing
-# round 4's hand-picked demotion list, which the advisor correctly flagged
-# as steering the gate):
-#
-#   1. Queries that have NEVER had an external-gate row (no entry in any
-#      committed CORRECTNESS_r*.json) come FIRST, in registration order —
-#      every query earns at least one driver-verified row over the rounds.
-#   2. The remainder keep historical registration order.
-#
-# Nothing is demoted by name: every query that rotates past position 50
-# this round already has a driver-green row in CORRECTNESS_r01..r04, and
-# all 82+ stay oracle-checked locally every round. If the rotation history
-# can't be read (package used outside the repo), natural order stands.
-
-
-def _reorder_registry() -> None:
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    gated: set[str] = set()
-    try:
-        for f in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-            with open(f) as fh:
-                gated |= set(json.load(fh).keys())
-    except Exception:
-        return
-    if not gated:
-        return
-    keys = list(REGISTRY.keys())
-    order = [k for k in keys if k not in gated] + [k for k in keys if k in gated]
-    assert sorted(order) == sorted(keys)
-    snapshot = dict(REGISTRY)
-    REGISTRY.clear()
-    for k in order:
-        REGISTRY[k] = snapshot[k]
-
-
-_reorder_registry()

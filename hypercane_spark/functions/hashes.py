@@ -26,6 +26,9 @@ linearly with executors.
 
 from __future__ import annotations
 
+import functools
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -41,6 +44,22 @@ def tokens_ws(text: Column | str, lowercase: bool = True) -> Column:
     if lowercase:
         t = F.lower(t)
     return F.filter(F.split(t, r"\s+"), lambda x: x != F.lit(""))
+
+
+def _memo_by_name(build: Callable[[Column | str], Column]):
+    """Build the simhash Column once per process for each column *name*.
+
+    The unrolled 64-way vote and weight arrays cost ~0.45 s of Py4J calls
+    per build, while the finished expression only names its input column
+    (resolved per plan), so one Column serves every DataFrame. A ``Column``
+    argument is built afresh each call."""
+    by_name = functools.cache(build)
+
+    @functools.wraps(build)
+    def fn(text: Column | str) -> Column:
+        return by_name(text) if isinstance(text, str) else build(text)
+
+    return fn
 
 
 def _bit_votes(hashes: Column) -> Column:
@@ -95,6 +114,7 @@ def simhash_of_tokens(tokens: Column) -> Column:
     return _votes_to_signed(_bit_votes(hashes))
 
 
+@_memo_by_name
 def simhash64_md5(text: Column | str) -> Column:
     """Raw simhash whose per-token 64-bit hash derives from md5 instead of
     xxhash64: hi 32 bits = hex chars 17-24, lo 32 bits = chars 25-32 (both
@@ -141,11 +161,13 @@ def simhash64_md5(text: Column | str) -> Column:
     return _votes_to_signed(F.aggregate(toks, zero64, merge))
 
 
+@_memo_by_name
 def simhash64(text: Column | str) -> Column:
     """Raw simhash: simhash of whitespace tokens of the (lowercased) text."""
     return simhash_of_tokens(tokens_ws(text))
 
 
+@_memo_by_name
 def tf_simhash64(text: Column | str) -> Column:
     """Reference 'tf simhash': simhash over the sorted token sequence
     (/root/reference/hypercane/utils.py:438-443 — ``' '.join(sorted(words))``;

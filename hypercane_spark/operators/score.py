@@ -8,8 +8,6 @@ the TSV writer.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -170,41 +168,58 @@ def bm25_score(
     /root/reference/hypercane/score/bm25.py:6-48 — whole corpus in RAM,
     acknowledged in its TODO at :26).
 
-    Fully distributed rebuild: two scalar corpus stats (N, avgdl — one
-    aggregate), per-term document frequencies (one aggregate over the
-    term-filtered explode), broadcast back as literals, then the BM25 sum is
-    a pure column expression:
+    Fully distributed rebuild with no driver action: one one-row aggregate
+    holds N, avgdl and, per distinct query term, its document frequency
+    (``count(when(array_contains(toks, t)))``); idf is computed on that row,
+    which is broadcast-cross-joined back, and the BM25 sum is a pure column
+    expression:
 
         Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))
 
     idf = ln((N − df + 0.5)/(df + 0.5) + 1)  (Okapi+floor, rank_bm25's form).
+    A null or zero avgdl (no tokens anywhere) counts as 1.0; a repeated
+    query term is summed once per occurrence.
     """
     toks = tokens_ws(text)
+    terms = [q.lower() for q in query_terms]
+    slot = {t: i for i, t in enumerate(dict.fromkeys(terms))}
+    dfreq = [
+        F.count(F.when(F.array_contains(toks, t), 1)).alias(f"__bm25_df{i}")
+        for t, i in slot.items()
+    ]
+    avgdl = F.avg(F.size(toks))
     stats = df.agg(
-        F.count(F.lit(1)).alias("n"), F.avg(F.size(toks)).alias("avgdl")
-    ).first()
-    n_docs, avgdl = stats["n"], stats["avgdl"] or 1.0
-
-    dfreq_rows = (
-        df.select(F.explode(F.array_distinct(toks)).alias("t"))
-        .where(F.col("t").isin(*[q.lower() for q in query_terms]))
-        .groupBy("t")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .collect()
+        F.count(F.lit(1)).alias("__bm25_n"),
+        F.when(avgdl.isNull() | (avgdl == 0), 1.0)
+        .otherwise(avgdl)
+        .alias("__bm25_avgdl"),
+        *dfreq,
+    ).select(
+        "__bm25_avgdl",
+        *[
+            F.log(
+                (F.col("__bm25_n") - F.col(f"__bm25_df{i}") + 0.5)
+                / (F.col(f"__bm25_df{i}") + 0.5)
+                + 1.0
+            ).alias(f"__bm25_idf{i}")
+            for i in slot.values()
+        ],
     )
-    dfreq = {r["t"]: r["df"] for r in dfreq_rows}
 
     dl = F.size(toks).cast("double")
     score = F.lit(0.0)
-    for q in query_terms:
-        ql = q.lower()
-        d = dfreq.get(ql, 0)
-        idf = math.log((n_docs - d + 0.5) / (d + 0.5) + 1.0)
+    for ql in terms:
+        idf = F.col(f"__bm25_idf{slot[ql]}")
         tf = F.size(F.filter(toks, lambda x: x == F.lit(ql))).cast("double")
-        score = score + F.lit(idf) * (
-            tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / F.lit(float(avgdl))))
+        score = score + idf * (
+            tf * (k1 + 1.0)
+            / (tf + k1 * (1.0 - b + b * dl / F.col("__bm25_avgdl")))
         )
-    return df.withColumn(out, F.round(score, 6))
+    return (
+        df.crossJoin(F.broadcast(stats))
+        .withColumn(out, F.round(score, 6))
+        .drop(*stats.columns)
+    )
 
 
 def top_entities_bm25(

@@ -167,7 +167,15 @@ def embedding_near_dups(
     Passing ``dim`` selects the legacy driver-generated gaussian planes
     (bit-compatible with earlier releases and with ``lsh_bucket_topk``'s
     query-side numpy bucketing). Bucket families differ, but both are valid
-    sign-LSH: the near-dup SET is threshold-verified either way."""
+    sign-LSH: every returned pair is threshold-verified either way.
+
+    Behaviour change for ``dim=None`` callers: earlier releases bucketed
+    with gaussian planes on this path too; it now uses the sin-hash
+    weights, which are uniform in [−1, 1] rather than gaussian. Sign
+    validity only needs symmetry, but the exact 1 − θ/π collision
+    probability of gaussian planes does not hold, so which near-dup pairs
+    share a bucket (recall) can differ between the two families for the
+    same input. Pass ``dim`` to keep the gaussian-plane result."""
     if dim is None:
         bucket = lsh_bucket_hash(F.col("v"), bits, seed)
     else:

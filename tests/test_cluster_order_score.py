@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from hypercane_spark.operators import cluster as C
@@ -99,26 +100,70 @@ def test_bm25_matches_pure_python(spark, mementos):
     docs = [r["bpfree_text"] for r in mementos.select("bpfree_text").orderBy("urim").collect()]
     q = ["archive", "news"]
     out = S.bm25_score(mementos, q).select("bpfree_text", "bm25_score").collect()
-    # pure-python BM25Okapi (same formula as rank_bm25)
-    tokenized = [d.lower().split() for d in docs]
-    n = len(tokenized)
-    avgdl = sum(len(d) for d in tokenized) / n
-    import math as _m
-
-    dfreq = {t: sum(1 for d in tokenized if t in set(d)) for t in q}
-    idf = {t: _m.log((n - dfreq[t] + 0.5) / (dfreq[t] + 0.5) + 1.0) for t in q}
-
-    def score(tokens):
-        s = 0.0
-        dl = len(tokens)
-        for t in q:
-            tf = tokens.count(t)
-            s += idf[t] * tf * 2.5 / (tf + 1.5 * (1 - 0.75 + 0.75 * dl / avgdl))
-        return s
-
-    want = {d: round(score(d.lower().split()), 6) for d in docs}
+    want = dict(zip(docs, _py_bm25(docs, q)))
     for r in out:
         assert abs(r["bm25_score"] - want[r["bpfree_text"]]) < 1e-6
+
+
+def _py_bm25(docs, query, k1=1.5, b=0.75):
+    """Pure-Python BM25Okapi (rank_bm25's formula) over lowercased
+    whitespace tokens; an avgdl of 0 counts as 1.0."""
+    tokenized = [d.lower().split() for d in docs]
+    n = len(tokenized)
+    avgdl = (sum(len(d) for d in tokenized) / n) or 1.0
+    terms = [t.lower() for t in query]
+    dfreq = {t: sum(1 for d in tokenized if t in d) for t in terms}
+    idf = {t: math.log((n - dfreq[t] + 0.5) / (dfreq[t] + 0.5) + 1.0) for t in terms}
+    out = []
+    for d in tokenized:
+        s = 0.0
+        for t in terms:
+            tf = d.count(t)
+            s += idf[t] * tf * (k1 + 1) / (tf + k1 * (1 - b + b * len(d) / avgdl))
+        out.append(round(s, 6))
+    return out
+
+
+def test_bm25_builds_without_driver_action(spark, monkeypatch):
+    df = spark.createDataFrame(
+        [(1, "spark join spark"), (2, "join tables"), (3, "")],
+        "id int, bpfree_text string",
+    )
+
+    def _no_action(self, *a, **k):
+        raise AssertionError("driver action while building bm25_score")
+
+    # patch the concrete class: it overrides the abstract DataFrame's
+    # methods, so a patch on pyspark.sql.DataFrame would never be called
+    monkeypatch.setattr(type(df), "first", _no_action)
+    monkeypatch.setattr(type(df), "collect", _no_action)
+    scored = S.bm25_score(df, ["spark", "join"])
+    monkeypatch.undo()
+    assert scored.columns == ["id", "bpfree_text", "bm25_score"]
+    got = [r["bm25_score"] for r in scored.orderBy("id").collect()]
+    want = _py_bm25(["spark join spark", "join tables", ""], ["spark", "join"])
+    assert got == pytest.approx(want, abs=1e-6)
+
+
+def test_bm25_repeated_absent_terms_and_empty_corpus(spark):
+    texts = [
+        "Spark joins tables and Spark shuffles",
+        "the archive of news",
+        "spark",
+        "",
+        "SPARK spark Spark archive",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, t string")
+    # mixed case and repeated (summed twice), plus a term in no document
+    query = ["Spark", "spark", "ARCHIVE", "zebra"]
+    got = [r["s"] for r in S.bm25_score(df, query, text="t", out="s").orderBy("id").collect()]
+    assert got == pytest.approx(_py_bm25(texts, query), abs=1e-6)
+    assert got[0] > 0 and got[3] == 0.0
+
+    # every text empty: avgdl 0 → 1.0, every score 0
+    empty = spark.createDataFrame([(0, ""), (1, "  ")], "id int, t string")
+    got = [r["s"] for r in S.bm25_score(empty, query, text="t", out="s").orderBy("id").collect()]
+    assert got == _py_bm25(["", "  "], query) == [0.0, 0.0]
 
 
 def test_image_count_score(spark, mementos, images):

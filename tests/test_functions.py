@@ -43,3 +43,20 @@ def test_fixture_simhashes_consistent(spark, mementos):
         ).count()
     )
     assert bad == 0
+
+
+def test_simhash_by_name_is_one_column_safe_across_plans(spark):
+    """A column name yields one memoized Column; it resolves ``x`` by name
+    in each plan, wherever the column sits."""
+    texts = ["the quick brown fox", "Jumps over the lazy dog dog", ""]
+    a = spark.createDataFrame([(t, i) for i, t in enumerate(texts)], "x string, i int")
+    b = spark.createDataFrame(
+        [(i, 1.0, t) for i, t in enumerate(texts)], "i int, w double, x string"
+    )
+    assert simhash64("x") is simhash64("x")
+    assert tf_simhash64("x") is tf_simhash64("x")
+    for df in (a, b):
+        rows = df.select("x", simhash64("x").alias("sh"), tf_simhash64("x").alias("tf")).collect()
+        for r in rows:
+            assert r["sh"] == py_simhash64(r["x"])
+            assert r["tf"] == py_tf_simhash64(r["x"])

@@ -536,7 +536,6 @@ def test_embedding_near_dups_default_path_no_driver_action(spark, monkeypatch):
     # driver .first() — the bucket is computed by lsh_bucket_hash (weights
     # from the element index, dim-free). Both paths find the planted pair.
     import numpy as np
-    from pyspark.sql import DataFrame
 
     from hypercane_spark.operators import similarity as SIM
 
@@ -549,7 +548,8 @@ def test_embedding_near_dups_default_path_no_driver_action(spark, monkeypatch):
     def _no_first(self, *a, **k):
         raise AssertionError("driver .first() on the default near-dup path")
 
-    monkeypatch.setattr(DataFrame, "first", _no_first)
+    # the concrete class overrides the abstract DataFrame's methods
+    monkeypatch.setattr(type(df), "first", _no_first)
     default = {
         (r["vec_id_a"], r["vec_id_b"])
         for r in SIM.embedding_near_dups(df, threshold=0.95, bits=6).collect()

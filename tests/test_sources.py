@@ -240,3 +240,41 @@ def test_sumgram_conflation(spark):
     assert "big red" not in out
     # 'small cat' (df 8) has parents 'small cat sleeps'/'runs' at 4/8 < 0.8
     assert "small cat" in out and out["small cat"][0] == 8
+
+
+def test_load_tables_reads_only_what_is_looked_up(spark, tmp_path):
+    # orders.parquet is not parquet: an eager read of every table fails,
+    # a lazy one never touches it
+    import pandas as pd
+
+    pd.DataFrame({"doc_id": [1, 2]}).to_parquet(tmp_path / "documents.parquet", index=False)
+    (tmp_path / "orders.parquet").write_text("not parquet")
+    tables = IO.load_tables(spark, str(tmp_path))
+    assert set(tables) == {"documents", "orders"} and len(tables) == 2
+    assert "documents" in tables and "lineitem" not in tables
+    assert sorted(r["doc_id"] for r in tables["documents"].collect()) == [1, 2]
+
+
+def test_load_tables_reuses_reads_until_the_file_changes(spark, tmp_path):
+    import pandas as pd
+
+    path = tmp_path / "documents.parquet"
+    pd.DataFrame({"doc_id": [1, 2]}).to_parquet(path, index=False)
+    first = IO.load_tables(spark, str(tmp_path))["documents"]
+    assert IO.load_tables(spark, str(tmp_path))["documents"] is first
+    pd.DataFrame({"doc_id": [7, 8, 9]}).to_parquet(path, index=False)
+    again = IO.load_tables(spark, str(tmp_path))["documents"]
+    assert again is not first
+    assert sorted(r["doc_id"] for r in again.collect()) == [7, 8, 9]
+
+
+def test_load_tables_holds_reads_of_one_session_only(spark, tmp_path):
+    import pandas as pd
+
+    pd.DataFrame({"doc_id": [1, 2]}).to_parquet(tmp_path / "documents.parquet", index=False)
+    first = IO.load_tables(spark, str(tmp_path))["documents"]
+    other = spark.newSession()
+    theirs = IO.load_tables(other, str(tmp_path))["documents"]
+    assert theirs is not first and theirs.sparkSession is other
+    assert all(df.sparkSession is other for _, df in IO._READS.values())
+    assert IO.load_tables(spark, str(tmp_path))["documents"].sparkSession is spark

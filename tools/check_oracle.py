@@ -2,6 +2,10 @@
 query on Spark AND its DuckDB oracle at sf0.01, compare row count, schema
 (column names), and an order-insensitive value hash.
 
+After the PASS/FAIL lines it prints each query's Spark wall time (query
+build plus collect, in registry order) and their total, so a rise in the
+driver's fixed cost per query shows without a benchmark run.
+
 Usage: python tools/check_oracle.py [sf_dir] [name_filter]
 """
 
@@ -10,6 +14,7 @@ from __future__ import annotations
 import hashlib
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -51,29 +56,30 @@ def main() -> int:
 
     from hypercane_spark.entry_queries import REGISTRY
     from hypercane_spark.session import get_spark
+    from hypercane_spark.sources.io import TABLES
 
     spark = get_spark("oracle-check", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "events", "documents", "embeddings",
-    ]:
+    for t in TABLES:
         p = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
     n_pass = n_fail = n_rows_only = 0
+    spark_s: dict[str, float] = {}
     import re
 
     for name, (fn, sql) in REGISTRY.items():
         if name_filter and not re.search(name_filter, name):
             continue
         try:
+            t0 = time.perf_counter()
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
+            spark_s[name] = time.perf_counter() - t0
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error {str(e)[:200]}")
             n_fail += 1
@@ -114,6 +120,10 @@ def main() -> int:
         else:
             print(f"PASS  {name}: {len(srows)} rows")
             n_pass += 1
+    print("\nspark wall s (build + collect):")
+    for name, secs in spark_s.items():
+        print(f"  {secs:7.3f}  {name}")
+    print(f"  {sum(spark_s.values()):7.3f}  total over {len(spark_s)} queries")
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rows_only} rows-only")
     spark.stop()
     return 1 if n_fail else 0
