@@ -211,6 +211,24 @@ def run_crawl(spark) -> dict:
         "/dev/shm" if os.path.isdir("/dev/shm") else os.getcwd(),
     )
     ckpt_dir = tempfile.mkdtemp(prefix="crawl-ckpt-", dir=ckpt_base)
+    # The seen test is the engine's exact anti-join; either knob below
+    # switches on the bloom prefilter in front of it (an A/B lever).
+    # SPARK_GRAFT_BLOOM_SHARDS picks its shape: 0 → monolithic driver
+    # array, >0 → that many shards; unset → the engine's auto-select,
+    # which picks the monolith at the default 2^20 bits (below
+    # SHARD_AUTO_MIN_BITS). SPARK_GRAFT_BLOOM_BITS sizes the filter (total
+    # bits) so the sharded-vs-monolith crossover A/B can run at design
+    # sizing (~10 bits/key) instead of the smoke default.
+    bloom = {
+        key: int(os.environ[var])
+        for key, var in (
+            ("bloom_shards", "SPARK_GRAFT_BLOOM_SHARDS"),
+            ("bloom_bits", "SPARK_GRAFT_BLOOM_BITS"),
+        )
+        if os.environ.get(var)
+    }
+    if bloom:
+        bloom["seen_filter"] = "bloom"
     eng = CrawlEngine(
         spark,
         web,
@@ -232,21 +250,7 @@ def run_crawl(spark) -> dict:
                 os.environ.get("SPARK_GRAFT_PSNR_SAMPLE", "1")
             ),
             collect_metrics=False,
-            # SPARK_GRAFT_BLOOM_SHARDS=0 → legacy monolithic seen-filter
-            # (A/B lever); unset → the engine's sharded default.
-            # SPARK_GRAFT_BLOOM_BITS sizes the filter (total bits) so the
-            # sharded-vs-monolith crossover A/B can run at design sizing
-            # (~10 bits/key) instead of the smoke default.
-            **(
-                {"bloom_shards": int(os.environ["SPARK_GRAFT_BLOOM_SHARDS"])}
-                if os.environ.get("SPARK_GRAFT_BLOOM_SHARDS")
-                else {}
-            ),
-            **(
-                {"bloom_bits": int(os.environ["SPARK_GRAFT_BLOOM_BITS"])}
-                if os.environ.get("SPARK_GRAFT_BLOOM_BITS")
-                else {}
-            ),
+            **bloom,
         ),
     )
     t0 = time.time()

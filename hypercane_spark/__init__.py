@@ -7,7 +7,7 @@ package re-expresses its operator *semantics* — identify / filter /
 cluster / score / order / sample — as declarative DataFrame stages, and
 replaces its sequential Scrapy TimeMap walk with a DataFrame-driven crawl
 frontier (partitioned priority queue, per-host politeness buckets,
-robots gating, sharded-bloom URL-seen dedup, checkpoint/resume).
+robots gating, exact anti-join URL-seen dedup, checkpoint/resume).
 
 Everything is built Spark-first: built-in ``pyspark.sql.functions``
 column expressions wherever possible (even simhash is pure JVM-side

@@ -5,7 +5,7 @@ Replaces Hypercane's sequential Scrapy TimeMap walk
 seen-set) with an iterative-batch scheduler where every round is one
 declarative DataFrame job:
 
-    frontier ──anti-join seen (bloom prefilter + exact backstop)
+    frontier ──anti-join seen (exact LEFT ANTI JOIN on surt)
             ──robots gate (broadcast dim join)
             ──politeness: row_number over (host[, salt]) ordered by
               (priority desc, urim asc) ≤ per-host budget
@@ -17,8 +17,8 @@ declarative DataFrame job:
               merge-on-read over the log (seed snapshot ∪ deltas)
 
 ``CrawlEngine.run`` is a loop over four round phases — start (resume or
-seed), plan (dedup + schedule), fetch, commit (links, checkpoint, filter
-update, compaction) — and the round state always lives in a
+seed), plan (dedup + schedule), fetch, commit (links, checkpoint, any
+prefilter update, compaction) — and the round state always lives in a
 ``RoundCheckpoint``: the given ``checkpoint_dir``, or a temp dir that is
 removed at interpreter exit.
 
@@ -38,9 +38,13 @@ Scale notes (10^10-URL design):
   plan over that log — no per-round lineage truncation, no O(|frontier|)
   store. Periodic compaction (CrawlConfig.compact_every) bounds the log's
   file count.
-- seen-membership is a sharded bloom prefilter (bit positions computed
-  JVM-side) + LEFT ANTI JOIN exact backstop; the anti-join shuffles only
-  bloom-positive candidates — at steady state a tiny fraction of the round.
+- seen-membership is an exact LEFT ANTI JOIN against the checkpointed
+  seen set (CrawlConfig.seen_filter="exact"). It measured faster than the
+  bloom prefilter at 40k and 2M URLs: a prefilter cannot skip scanning
+  `seen` (its "may be seen" rows still anti-join all of it) and adds a
+  Python pass per candidate. The bloom (monolithic or sharded) and cuckoo
+  prefilters stay selectable in front of the same join; how the join
+  grows with a 10^10-URL seen set is still to be measured.
 - per-host windows shuffle on host (salted when skewed); AQE handles
   residual skew.
 """
@@ -101,11 +105,14 @@ class CrawlConfig:
     # robots handling is north_rule-new behavior).
     round_seconds: float | None = None
     salt_hot_hosts: int = 1  # >1 splits hot-host queues for fetch parallelism
+    # the seen test: "exact" is the LEFT ANTI JOIN against the checkpointed
+    # seen set alone (measured fastest, see the module scale notes);
+    # "bloom" and "cuckoo" put a prefilter in front of that same join. The
+    # bloom_* and cuckoo_capacity settings below only matter with one.
+    seen_filter: str = "exact"
     bloom_bits: int = 1 << 20
     bloom_hashes: int = 5
-    use_bloom: bool = True
-    seen_filter: str = "bloom"  # "bloom" | "cuckoo" (use_bloom=False → exact)
-    # >0: the seen-filter is the SHARDED distributed (shard, bits) delta
+    # >0: the bloom seen-filter is the SHARDED distributed (shard, bits) delta
     # log — shard = pmod(xxhash64(surt), S), bits_per_shard = bloom_bits/S,
     # each shard built/appended/tested by the task owning it; the driver
     # never holds a bitmap and no broadcast is shipped per round. This is
@@ -127,6 +134,13 @@ class CrawlConfig:
     verify_payload: bool = False  # phash/PSNR fidelity check at fetch time
     psnr_sample_mod: int = 1  # >1: deep PSNR audit on 1/mod of image ids
     collect_metrics: bool = True  # False drops optional per-round counts
+
+    def __post_init__(self):
+        if self.seen_filter not in ("exact", "bloom", "cuckoo"):
+            raise ValueError(
+                "seen_filter must be 'exact', 'bloom' or 'cuckoo', not "
+                f"{self.seen_filter!r}"
+            )
 
 
 @dataclass
@@ -192,11 +206,12 @@ class CrawlEngine:
         else:
             self.errors = None
         self.metrics: list[RoundMetrics] = []
-        # incremental seen-filter: OR-updated with each round's newly seen
-        # keys (blooms compose under OR), so the per-round build cost is
-        # O(new keys), not O(entire seen set); rebuilt from the seen table
-        # on resume. seen_filter="cuckoo" swaps in the deletable
-        # fingerprint-table filter (same prefilter + exact-backstop shape).
+        # prefilter state, unused with seen_filter="exact". "bloom" is
+        # OR-updated with each round's newly seen keys (blooms compose
+        # under OR), so the per-round build cost is O(new keys), not
+        # O(entire seen set); rebuilt from the seen table on resume.
+        # "cuckoo" swaps in the deletable fingerprint-table filter (same
+        # prefilter + exact-backstop shape).
         self._bloom: bytes | None = None
         self._cuckoo = None
         # sharded-filter handle (cfg.bloom_shards > 0): a distributed
@@ -258,30 +273,21 @@ class CrawlEngine:
         # a seen URL would test "sure new" and skip the exact backstop, so
         # once full the prefilter is permanently distrusted and every
         # candidate takes the exact anti-join path.
-        use_cuckoo = (
-            self.cfg.use_bloom
-            and self.cfg.seen_filter == "cuckoo"
+        kind = self.cfg.seen_filter
+        if (
+            kind == "cuckoo"
             and self._cuckoo is not None
             and self._cuckoo.count > 0
             and not self._cuckoo.full
-        )
-        if use_cuckoo:
+        ):
             flagged = cuckoo_might_contain(
                 cand, "__surt", self._cuckoo, out="__in_bloom"
             )
-        elif (
-            self.cfg.use_bloom
-            and self._shards() > 0
-            and self._sharded is not None
-        ):
+        elif kind == "bloom" and self._shards() > 0 and self._sharded is not None:
             flagged = sharded_bloom_might_contain(
                 cand, "__surt", self._sharded, out="__in_bloom"
             )
-        elif (
-            self.cfg.use_bloom
-            and self._shards() == 0
-            and self._bloom is not None
-        ):
+        elif kind == "bloom" and self._shards() == 0 and self._bloom is not None:
             flagged = bloom_might_contain(
                 cand,
                 "__surt",
@@ -291,6 +297,8 @@ class CrawlEngine:
                 broadcast_registry=self._stale_broadcasts,
             )
         else:
+            # the exact seen test: always with seen_filter="exact", and with
+            # a prefilter until its first update (or once a cuckoo is full)
             return cand.join(seen, cand["__surt"] == seen["surt"], "left_anti")
         sure_new = flagged.where(~F.col("__in_bloom")).drop("__in_bloom")
         maybe = flagged.where(F.col("__in_bloom")).drop("__in_bloom")
@@ -433,12 +441,13 @@ class CrawlEngine:
 
     def _start_phase(self, seeds: DataFrame, resume: bool) -> tuple[int, DataFrame]:
         """→ (first round, seen). Resume continues after the latest complete
-        checkpointed round and rebuilds the seen-filter from its seen set;
-        otherwise the seed frontier is snapshotted and filters reset."""
+        checkpointed round (and rebuilds a bloom/cuckoo prefilter from its
+        seen set); otherwise the seed frontier is snapshotted and filters
+        reset."""
         rounds = self.ckpt.rounds() if resume else []
         if rounds:
             seen = self.ckpt.read_seen(self.spark, rounds[-1])
-            if self.cfg.use_bloom and not seen.isEmpty():
+            if self.cfg.seen_filter != "exact" and not seen.isEmpty():
                 self._rebuild_filter(seen)
             return rounds[-1] + 1, seen
         # one-time seed snapshot — the 'round -1' frontier delta; every
@@ -483,8 +492,9 @@ class CrawlEngine:
 
         MERGE-ON-READ: the frontier is never materialized as a table. Each
         round reconstructs it lazily from the append-only delta log — seed
-        snapshot ∪ per-round link deltas — seen-filtered row-wise (bloom/
-        cuckoo prefilter + exact anti-join backstop), then folded by
+        snapshot ∪ per-round link deltas — seen-filtered row-wise (the
+        exact anti-join, behind a bloom/cuckoo prefilter if one is
+        configured), then folded by
         ``merge_discoveries``. Filtering first is a manual pushdown of the
         seen anti-join through the aggregate (legal because seen is keyed
         on surt(urim): a urim's copies are all-seen or all-new), so rows
@@ -564,8 +574,8 @@ class CrawlEngine:
         return fetched
 
     def _update_filter(self, selected: DataFrame) -> None:
-        """O(selected) incremental seen-filter update."""
-        if not self.cfg.use_bloom:
+        """O(selected) incremental prefilter update; none for "exact"."""
+        if self.cfg.seen_filter == "exact":
             return
         keys = selected.select(F.col("__surt").alias("surt"))
         if self.cfg.seen_filter == "cuckoo":
@@ -626,14 +636,14 @@ class CrawlEngine:
         t = time.time()
         # this round's seen delta is the selected surts (distinct within
         # the round; disjoint from `seen` by construction — every candidate
-        # passed the seen anti-join, and the bloom/cuckoo prefilters have
-        # no false negatives on the paths that skip it)
+        # passed the seen anti-join, or a bloom/cuckoo prefilter with no
+        # false negatives on the paths that skip it)
         delta = selected.select(F.col("__surt").alias("surt")).distinct()
         links = self._extract_links(fetched, seen.unionByName(delta))
         m.timings["links"] = time.time() - t
 
         t = time.time()
-        # The filter update reads only `selected` (persisted) and is
+        # A prefilter update reads only `selected` (persisted) and is
         # consumed no earlier than next round's _not_seen, while the writes
         # read fetched/seen — independent inputs, so they run concurrently
         # and their job latencies overlap.

@@ -101,7 +101,7 @@ def test_robots_gate(spark, web, robots, robots_rows):
 
 
 def test_crawl_order_and_seen_match_oracle(spark, web, web_rows, robots, robots_rows, seeds, tmp_path):
-    cfg = CrawlConfig(per_host_budget=4, max_depth=3, max_rounds=20, use_bloom=True)
+    cfg = CrawlConfig(per_host_budget=4, max_depth=3, max_rounds=20)
     eng = CrawlEngine(
         spark, web, robots=robots, checkpoint_dir=str(tmp_path / "ck"), config=cfg
     )

@@ -359,7 +359,7 @@ def test_crawl_seed_miss_does_not_drop_deferred(spark, tmp_path):
         "urim string, urir string, host string, memento_datetime timestamp, "
         "damage double, priority double, image_id string, outlinks array<string>",
     )
-    eng = CrawlEngine(spark, web, config=CrawlConfig(max_rounds=4, use_bloom=False))
+    eng = CrawlEngine(spark, web, config=CrawlConfig(max_rounds=4))
     # seed_frontier inner-joins web, so build a frontier with a ghost row
     # the way a user-supplied frontier table would arrive
     seeds = eng.seed_frontier(web.select("urim").where(F.col("urim").endswith("m-0")))

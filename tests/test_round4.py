@@ -375,7 +375,8 @@ def test_crawl_monolith_bloom_still_matches_oracle(spark):
     )
     seeds = sorted(r["urim"] for r in web_rows)[::10]
     cfg = CrawlConfig(
-        per_host_budget=3, max_depth=2, max_rounds=8, bloom_shards=0
+        per_host_budget=3, max_depth=2, max_rounds=8,
+        seen_filter="bloom", bloom_shards=0,
     )
     eng = CrawlEngine(spark, web, robots=robots, config=cfg)
     fetched = eng.run(
@@ -414,7 +415,8 @@ def test_crawl_sharded_bloom_matches_oracle_and_cleans_up(spark, tmp_path):
     )
     seeds = sorted(r["urim"] for r in web_rows)[::10]
     cfg = CrawlConfig(
-        per_host_budget=3, max_depth=2, max_rounds=8, bloom_shards=8
+        per_host_budget=3, max_depth=2, max_rounds=8,
+        seen_filter="bloom", bloom_shards=8,
     )
     eng = CrawlEngine(
         spark, web, robots=robots,
@@ -668,7 +670,9 @@ def test_crawl_sharded_resume_equivalence(spark, tmp_path):
             (r["urim"], r["round"]) for r in df.select("urim", "round").collect()
         )
 
-    base = dict(per_host_budget=3, max_depth=2, bloom_shards=8)
+    base = dict(
+        per_host_budget=3, max_depth=2, seen_filter="bloom", bloom_shards=8
+    )
     full = CrawlEngine(
         spark, web, robots=robots,
         checkpoint_dir=str(tmp_path / "full"),

@@ -63,6 +63,7 @@ WEB_SCHEMA = (
 )
 # the 400-URL web's crawl: two rounds, depth 2, no robots table
 CFG = dict(per_host_budget=20, max_depth=2, max_rounds=2)
+CFG3 = dict(CFG, max_rounds=3)
 
 
 @pytest.fixture(scope="module")
@@ -154,10 +155,10 @@ def test_crash_at_every_storage_write_resumes_to_oracle(spark, web400, tmp_path)
     from hypercane_spark.streaming.frontier import CrawlConfig, CrawlEngine
 
     rows, web, seed_urims, seeds = web400
-    want_order, want_seen = crawl_oracle(rows, seed_urims, **CFG)
-    # compaction after the last round puts snapshot writes and publishes
-    # in the sweep
-    cfg = CrawlConfig(**CFG, compact_every=2, collect_metrics=False)
+    # three rounds with a compaction after the second: the sweep covers
+    # snapshot writes, their publishes and a round read from a snapshot
+    want_order, want_seen = crawl_oracle(rows, seed_urims, **CFG3)
+    cfg = CrawlConfig(**CFG3, compact_every=2, collect_metrics=False)
 
     def engine(base: str, store) -> CrawlEngine:
         eng = CrawlEngine(spark, web, checkpoint_dir=base, config=cfg)
@@ -167,7 +168,7 @@ def test_crash_at_every_storage_write_resumes_to_oracle(spark, web400, tmp_path)
     counter = CountingStore()
     engine(str(tmp_path / "full"), counter).run(seeds)
     # seeds; per round fetched, two deltas, manifest; compaction 2 + 2
-    assert counter.writes == 1 + 4 * CFG["max_rounds"] + 4
+    assert counter.writes == 1 + 4 * CFG3["max_rounds"] + 4
 
     for k in range(1, counter.writes + 1):
         base = str(tmp_path / f"k{k}")
@@ -183,9 +184,54 @@ def test_crash_at_every_storage_write_resumes_to_oracle(spark, web400, tmp_path)
         order += resumed.pop_order(resumed.run(seeds, resume=True))
         seen = {
             r["surt"]
-            for r in ckpt.read_seen(spark, CFG["max_rounds"] - 1).collect()
+            for r in ckpt.read_seen(spark, CFG3["max_rounds"] - 1).collect()
         }
         assert (order, seen) == (want_order, want_seen), f"crash at write {k}"
+
+
+def test_default_seen_test_is_exact_and_never_calls_a_prefilter(
+    spark, web400, tmp_path, monkeypatch
+):
+    """The default crawl, cut after round 1 and resumed, reproduces the
+    oracle without building, updating or probing any seen prefilter; an
+    unknown ``seen_filter`` is refused instead of running some path."""
+    import hypercane_spark.streaming.frontier as frontier
+    from hypercane_spark.oracle.crawl import crawl_oracle
+
+    with pytest.raises(ValueError, match="seen_filter"):
+        frontier.CrawlConfig(seen_filter="blom")
+
+    def refuse(name):
+        def call(*a, **k):
+            raise AssertionError(f"{name} called on the exact seen path")
+
+        return call
+
+    for name in (
+        "build_bloom", "build_sharded_bloom", "sharded_bloom_or_update",
+        "build_cuckoo", "cuckoo_add_df", "bloom_might_contain",
+        "sharded_bloom_might_contain", "cuckoo_might_contain", "bloom_or",
+    ):
+        monkeypatch.setattr(frontier, name, refuse(name))
+
+    rows, web, seed_urims, seeds = web400
+    want_order, want_seen = crawl_oracle(rows, seed_urims, **CFG)
+    base = str(tmp_path / "ck")
+
+    def engine(max_rounds: int) -> frontier.CrawlEngine:
+        cfg = frontier.CrawlConfig(**dict(CFG, max_rounds=max_rounds))
+        return frontier.CrawlEngine(spark, web, checkpoint_dir=base, config=cfg)
+
+    cut = engine(1)
+    order = cut.pop_order(cut.run(seeds))
+    resumed = engine(CFG["max_rounds"])
+    order += resumed.pop_order(resumed.run(seeds, resume=True))
+    seen = {
+        r["surt"]
+        for r in resumed.ckpt.read_seen(spark, CFG["max_rounds"] - 1).collect()
+    }
+    assert (order, seen) == (want_order, want_seen)
+    assert resumed._stale_broadcasts == []
 
 
 def test_perfbench_probes_install_on_engine(spark, web400, tmp_path):
@@ -205,7 +251,7 @@ def test_perfbench_probes_install_on_engine(spark, web400, tmp_path):
     try:
         _install_probes(tracer, {"leg": "crawl", "round": None})
         eng = frontier.CrawlEngine(
-            spark, web, config=frontier.CrawlConfig(**CFG)
+            spark, web, config=frontier.CrawlConfig(**CFG, seen_filter="bloom")
         )
         assert eng.pop_order(eng.run(seeds))
     finally:
