@@ -258,16 +258,20 @@ def run_crawl(spark) -> dict:
     aggs = [F.count("*").alias("n")]
     if CRAWL_PAYLOAD:
         aggs += [
-            F.avg(F.col("phash_ok").cast("int")).alias("phash_ok_rate"),
+            F.sum(F.col("phash_ok").cast("int")).alias("n_ok"),
             F.min("psnr_db").alias("min_psnr_db"),
         ]
     agg = fetched.agg(*aggs).collect()[0]
     n_fetched = agg["n"]
     wall = time.time() - t0
     shutil.rmtree(ckpt_dir, ignore_errors=True)
+    # a payload the verifier failed on is skipped by run(): count it as
+    # not ok, so a decoder fault cannot hide behind the rows that passed
+    errors = sum(m.errors for m in eng.metrics)
     fidelity = (
         {
-            "phash_ok_rate": float(agg["phash_ok_rate"] or 0.0),
+            "phash_ok_rate": (agg["n_ok"] or 0) / max(n_fetched + errors, 1),
+            "errors": errors,
             "min_psnr_db": round(min(float(agg["min_psnr_db"] or 0.0), 1e9), 2),
         }
         if CRAWL_PAYLOAD

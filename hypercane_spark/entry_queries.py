@@ -1382,10 +1382,10 @@ def agg_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     library; the Spark-native form is the same explode→count→top-k over
     n-gram windows — a conflation pass or library call slots into the
     same aggregation)."""
+    from hypercane_spark.functions.hashes import tokens_ws
+
     d = _docs(spark, sf_dir)
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != F.lit("")
-    )
+    toks = tokens_ws("text")
     bigrams = (
         d.select(toks.alias("toks"))
         .where(F.size("toks") >= 2)

@@ -17,8 +17,9 @@ ANTI join. The Spark shape here:
 - ``run_stage``    — the packaged form: apply, localCheckpoint (one compute
   feeds both splits), record failures to the store, return survivors.
 
-The crawl engine's fetch stage and the multimodal decode measure plug into
-this (CrawlEngine(errors_dir=…), decode_stats(store=…)).
+The multimodal decode measure plugs into this (``decode_stats(store=…)``).
+The crawl keeps its fetch errors in each round's checkpointed fetched rows;
+``RoundCheckpoint.read_errors`` returns them in ``ERRORS_SCHEMA`` shape.
 """
 
 from __future__ import annotations

@@ -12,12 +12,14 @@ embarrassingly parallel across groups).
 from __future__ import annotations
 
 import math
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hypercane_spark.functions.hashes import tokens_ws
 from hypercane_spark.functions.urls import url_host
 
 
@@ -39,6 +41,31 @@ def _compose(df: DataFrame, new_label, cluster: str = "cluster") -> DataFrame:
         ).otherwise(F.concat_ws("~~~", F.col(cluster), new_str))
         return df.withColumn(cluster, composed)
     return df.withColumn(cluster, new_str)
+
+
+def _prior(df: DataFrame, cluster: str) -> Column:
+    """The prior assignment, or one global group when there is none."""
+    return F.col(cluster) if cluster in df.columns else F.lit("")
+
+
+def _relabel_per_group(
+    df: DataFrame,
+    by: Column,
+    labels: Callable[[pd.DataFrame], np.ndarray],
+    cluster: str,
+) -> DataFrame:
+    """Fit ``labels(pdf) -> int64 array`` once per ``by`` group inside
+    applyInPandas, then ``_compose`` each row's label onto its prior
+    cluster."""
+    work = df.withColumn("__grp", F.coalesce(by.cast("string"), F.lit("")))
+    schema = work.withColumn("__new", F.lit(0).cast("long")).schema
+
+    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf["__new"] = labels(pdf)
+        return pdf
+
+    out = work.groupBy("__grp").applyInPandas(fit, schema=schema)
+    return _compose(out, F.col("__new"), cluster=cluster).drop("__grp", "__new")
 
 
 def time_slice(
@@ -171,23 +198,14 @@ def kmeans_mdt(
     99999 at :64-77 — our deterministic k-means cannot fail, so no sentinel).
     k defaults to ceil(sqrt(group size)) per the DSA2 pipeline
     (/root/reference/hypercane/packaged_algorithms/dsa2.halg:192-207)."""
-    has_prior = cluster in df.columns
-    grouping = F.col(cluster) if has_prior else F.lit("")
-    work = df.withColumn("__grp", F.coalesce(grouping.cast("string"), F.lit("")))
-    schema = work.withColumn("__new", F.lit(0).cast("long")).schema
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+    def labels(pdf: pd.DataFrame) -> np.ndarray:
         vals = (
             pd.to_datetime(pdf[mdt]).astype("int64") // 10**9
         ).to_numpy(dtype=float)
         kk = k if k is not None else math.ceil(math.sqrt(len(pdf)))
-        pdf = pdf.copy()
-        pdf["__new"] = _kmeans_1d(vals, kk, seed=seed)
-        return pdf
+        return _kmeans_1d(vals, kk, seed=seed)
 
-    out = work.groupBy("__grp").applyInPandas(fit, schema=schema)
-    out = _compose(out, F.col("__new"), cluster=cluster)
-    return out.drop("__grp", "__new")
+    return _relabel_per_group(df, _prior(df, cluster), labels, cluster)
 
 
 # ---------------------------------------------------------- per-group DBSCAN
@@ -235,25 +253,16 @@ def dbscan_simhash(
     decimal digits; we use true bitwise hamming, the documented intent;
     eps defaults per /root/reference/hypercane/actions/cluster.py:74-111).
     Pairwise popcount is vectorized numpy (uint64 xor → bit_count)."""
-    has_prior = cluster in df.columns
-    grouping = F.col(cluster) if has_prior else F.lit("")
-    work = df.withColumn("__grp", F.coalesce(grouping.cast("string"), F.lit("")))
-    schema = work.withColumn("__new", F.lit(0).cast("long")).schema
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+    def labels(pdf: pd.DataFrame) -> np.ndarray:
         sh = pdf[simhash].to_numpy(dtype=np.int64).view(np.uint64)
         x = sh[:, None] ^ sh[None, :]
         # vectorized popcount via byte-table lookup
         bytes_ = x.view(np.uint8).reshape(len(sh), len(sh), 8)
         pop = np.unpackbits(bytes_, axis=2).sum(axis=2)
         dist = pop / 64.0
-        pdf = pdf.copy()
-        pdf["__new"] = _dbscan(dist, eps, min_samples)
-        return pdf
+        return _dbscan(dist, eps, min_samples)
 
-    out = work.groupBy("__grp").applyInPandas(fit, schema=schema)
-    out = _compose(out, F.col("__new"), cluster=cluster)
-    return out.drop("__grp", "__new")
+    return _relabel_per_group(df, _prior(df, cluster), labels, cluster)
 
 
 def dbscan_mdt(
@@ -267,12 +276,7 @@ def dbscan_mdt(
     estimated by the max-slope knee of sorted 2-NN distances when absent
     (reference /root/reference/hypercane/cluster/dbscan.py:119-201, knee
     :13-42)."""
-    has_prior = cluster in df.columns
-    grouping = F.col(cluster) if has_prior else F.lit("")
-    work = df.withColumn("__grp", F.coalesce(grouping.cast("string"), F.lit("")))
-    schema = work.withColumn("__new", F.lit(0).cast("long")).schema
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+    def labels(pdf: pd.DataFrame) -> np.ndarray:
         vals = (
             pd.to_datetime(pdf[mdt]).astype("int64") // 10**9
         ).to_numpy(dtype=float)
@@ -281,22 +285,15 @@ def dbscan_mdt(
         dist = np.abs(z[:, None] - z[None, :])
         e = eps
         if e is None:
-            # knee: sorted 2nd-NN distances, index of max slope
+            # knee: sorted 2nd-NN distances, index of max slope; 0.5 when
+            # there are too few points or the knee sits at distance 0
+            e = 0.5
             if len(z) > 2:
-                nn2 = np.sort(dist, axis=1)[:, min(2, len(z) - 1)]
-                s = np.sort(nn2)
-                e = float(s[np.argmax(np.diff(s))] if len(s) > 1 else 0.5)
-                if e <= 0:
-                    e = 0.5
-            else:
-                e = 0.5
-        pdf = pdf.copy()
-        pdf["__new"] = _dbscan(dist, e, min_samples)
-        return pdf
+                s = np.sort(np.sort(dist, axis=1)[:, 2])
+                e = float(s[np.argmax(np.diff(s))]) or 0.5
+        return _dbscan(dist, e, min_samples)
 
-    out = work.groupBy("__grp").applyInPandas(fit, schema=schema)
-    out = _compose(out, F.col("__new"), cluster=cluster)
-    return out.drop("__grp", "__new")
+    return _relabel_per_group(df, _prior(df, cluster), labels, cluster)
 
 
 # -------------------------------------------------------------- TF-IDF space
@@ -358,10 +355,8 @@ def kmeans_tfidf(
         engine = "pandas" if df.count() <= KMEANS_PANDAS_MAX_ROWS else "ml"
     if engine == "ml":
         return _kmeans_tfidf_ml(df, k, text, cluster, seed, num_features)
-    work = df.withColumn("__grp", F.lit(0))
-    schema = work.withColumn("__new", F.lit(0).cast("long")).schema
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+    def labels(pdf: pd.DataFrame) -> np.ndarray:
         m = _tfidf_matrix(pdf[text])
         kk = k if k is not None else math.ceil(math.sqrt(len(pdf)))
         kk = max(1, min(kk, len(pdf)))
@@ -370,23 +365,19 @@ def kmeans_tfidf(
         centers = m[idx]
         for _ in range(50):
             d = ((m[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            labels = d.argmin(axis=1)
+            assign = d.argmin(axis=1)
             new = np.stack(
                 [
-                    m[labels == i].mean(axis=0) if (labels == i).any() else centers[i]
+                    m[assign == i].mean(axis=0) if (assign == i).any() else centers[i]
                     for i in range(kk)
                 ]
             )
             if np.allclose(new, centers):
                 break
             centers = new
-        pdf = pdf.copy()
-        pdf["__new"] = labels.astype(np.int64)
-        return pdf
+        return assign.astype(np.int64)
 
-    out = work.groupBy("__grp").applyInPandas(fit, schema=schema)
-    out = _compose(out, F.col("__new"), cluster=cluster)
-    return out.drop("__grp", "__new")
+    return _relabel_per_group(df, F.lit(""), labels, cluster)
 
 
 def _kmeans_tfidf_ml(
@@ -410,8 +401,7 @@ def _kmeans_tfidf_ml(
     kk = k if k is not None else math.ceil(math.sqrt(n))
     kk = max(1, min(kk, n))
 
-    toks = F.filter(F.split(F.lower(F.col(text)), r"\s+"), lambda x: x != F.lit(""))
-    work = df.withColumn("__tokens", toks)
+    work = df.withColumn("__tokens", tokens_ws(text))
     tf = HashingTF(
         inputCol="__tokens", outputCol="__tf", numFeatures=num_features
     ).transform(work)
@@ -440,8 +430,7 @@ def lda_topics(
     from pyspark.ml.feature import CountVectorizer
     from pyspark.ml.functions import vector_to_array
 
-    toks = F.filter(F.split(F.lower(F.col(text)), r"\s+"), lambda x: x != F.lit(""))
-    work = df.withColumn("__tokens", toks)
+    work = df.withColumn("__tokens", tokens_ws(text))
     cv = CountVectorizer(inputCol="__tokens", outputCol="__features", minDF=2.0)
     model = cv.fit(work)
     feats = model.transform(work)
@@ -529,12 +518,8 @@ def dbscan_lda(
     from hypercane_spark.functions.text import EN_STOPWORDS
 
     stop = set(EN_STOPWORDS)
-    has_prior = cluster in df.columns
-    grouping = F.col(cluster) if has_prior else F.lit("")
-    work = df.withColumn("__grp", F.coalesce(grouping.cast("string"), F.lit("")))
-    schema = work.withColumn("__new", F.lit(0).cast("long")).schema
 
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+    def labels(pdf: pd.DataFrame) -> np.ndarray:
         vocab: dict[str, int] = {}
         docs: list[list[int]] = []
         for t in pdf[text]:
@@ -545,19 +530,13 @@ def dbscan_lda(
                 ids.append(vocab.setdefault(tok, len(vocab)))
             docs.append(ids)
         if not vocab:
-            pdf = pdf.copy()
-            pdf["__new"] = np.full(len(pdf), -1, dtype=np.int64)
-            return pdf
+            return np.full(len(pdf), -1, dtype=np.int64)
         theta = _lda_doc_topics(docs, len(vocab), num_topics, seed=seed)
         d2 = ((theta[:, None, :] - theta[None, :, :]) ** 2).sum(axis=2)
         dist = np.sqrt(np.maximum(d2, 0.0))
-        pdf = pdf.copy()
-        pdf["__new"] = _dbscan(dist, eps, min_samples)
-        return pdf
+        return _dbscan(dist, eps, min_samples)
 
-    out = work.groupBy("__grp").applyInPandas(fit, schema=schema)
-    out = _compose(out, F.col("__new"), cluster=cluster)
-    return out.drop("__grp", "__new")
+    return _relabel_per_group(df, _prior(df, cluster), labels, cluster)
 
 
 def dbscan_tfidf(
@@ -576,19 +555,10 @@ def dbscan_tfidf(
     matrix is O(group²), bounded by the largest prior cluster, and groups
     fit in parallel. The global-scale alternative is LSH-bucketed density
     clustering over sparse vectors."""
-    has_prior = cluster in df.columns
-    grouping = F.col(cluster) if has_prior else F.lit("")
-    work = df.withColumn("__grp", F.coalesce(grouping.cast("string"), F.lit("")))
-    schema = work.withColumn("__new", F.lit(0).cast("long")).schema
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
+    def labels(pdf: pd.DataFrame) -> np.ndarray:
         m = _tfidf_matrix(pdf[text])
         d2 = ((m[:, None, :] - m[None, :, :]) ** 2).sum(axis=2)
         dist = np.sqrt(np.maximum(d2, 0.0))
-        pdf = pdf.copy()
-        pdf["__new"] = _dbscan(dist, eps, min_samples)
-        return pdf
+        return _dbscan(dist, eps, min_samples)
 
-    out = work.groupBy("__grp").applyInPandas(fit, schema=schema)
-    out = _compose(out, F.col("__new"), cluster=cluster)
-    return out.drop("__grp", "__new")
+    return _relabel_per_group(df, _prior(df, cluster), labels, cluster)

@@ -15,6 +15,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hypercane_spark.functions.hashes import tokens_ws
+
 
 # ---------------------------------------------------------------- languages
 
@@ -259,10 +261,8 @@ def off_topic(
     first = df.groupBy(group).agg(*aggs)
     j = df.join(first, on=group, how="left")
 
-    toks = F.filter(F.split(F.lower(F.col(text)), r"\s+"), lambda x: x != F.lit(""))
-    ftoks = F.filter(
-        F.split(F.lower(F.col("__first_text")), r"\s+"), lambda x: x != F.lit("")
-    )
+    toks = tokens_ws(text)
+    ftoks = tokens_ws("__first_text")
 
     drop_cols = ["__first_text"]
     if measure == "wordcount":

@@ -123,14 +123,14 @@ def resize_images(
     return df.select(*keep, bytes_col).mapInPandas(batches, schema=out_schema)
 
 
-def payload_verify_udf(psnr_sample_mod: int = 1, capture_errors: bool = False):
+def payload_verify_udf(psnr_sample_mod: int = 1):
     """Scalar Arrow-batched UDF implementing the input_hint per-row fidelity
     contract: decode pixels, recompute the 64-bit average phash against the
     stored one, and measure PSNR of the decoded pixels against the
     ground-truth pixel source (regenerated deterministically from image_id —
     the stand-in for "the reference fetch"; lossless formats must be exact,
     lossy must reach ≥ 40 dB). Returns struct<phash_ok:boolean,
-    psnr_db:double> with 1e9 standing in for +inf.
+    psnr_db:double, err:string> with 1e9 standing in for +inf.
 
     ``psnr_sample_mod > 1`` audits the deep-pixel PSNR on a deterministic
     1/mod sample of image ids (null elsewhere; F.min skips nulls) while the
@@ -142,9 +142,9 @@ def payload_verify_udf(psnr_sample_mod: int = 1, capture_errors: bool = False):
     Being a scalar pandas UDF (not mapInPandas), it rides on the fetched
     rows in place — no extra shuffle or join to re-attach the columns.
 
-    ``capture_errors`` adds an ``err`` traceback field to the struct (null
-    on success) instead of letting a poisoned payload abort the fetch —
-    the crawl engine's error-store wiring (reference errors.py:5-38)."""
+    Record and skip, never abort (reference errors.py:5-38): a row whose
+    payload fails to decode or verify gets null ``phash_ok``/``psnr_db``
+    and its traceback in ``err``; ``err`` is null on success."""
     import traceback as tb
     import zlib
 
@@ -155,16 +155,10 @@ def payload_verify_udf(psnr_sample_mod: int = 1, capture_errors: bool = False):
         psnr,
     )
 
-    schema = "phash_ok boolean, psnr_db double" + (
-        ", err string" if capture_errors else ""
-    )
-
-    @F.pandas_udf(schema)
+    @F.pandas_udf("phash_ok boolean, psnr_db double, err string")
     def verify(
         image_id: pd.Series, data: pd.Series, phash: pd.Series
     ) -> pd.DataFrame:
-        oks, psnrs, errs = [], [], []
-
         def row(iid, b, p):
             if b is None:
                 return None, None
@@ -184,22 +178,13 @@ def payload_verify_udf(psnr_sample_mod: int = 1, capture_errors: bool = False):
             )
             return ok, min(psnr(truth, px), 1e9)
 
+        out = []
         for iid, b, p in zip(image_id, data, phash):
-            if capture_errors:
-                try:
-                    ok, ps = row(iid, b, p)
-                    errs.append(None)
-                except Exception:
-                    ok, ps = None, None
-                    errs.append(tb.format_exc())
-            else:
-                ok, ps = row(iid, b, p)
-            oks.append(ok)
-            psnrs.append(ps)
-        out = {"phash_ok": oks, "psnr_db": psnrs}
-        if capture_errors:
-            out["err"] = errs
-        return pd.DataFrame(out)
+            try:
+                out.append((*row(iid, b, p), None))
+            except Exception:
+                out.append((None, None, tb.format_exc()))
+        return pd.DataFrame(out, columns=["phash_ok", "psnr_db", "err"])
 
     return verify
 

@@ -5,7 +5,9 @@ Layout:
     <base>/seeds.parquet                  (one-time seed frontier snapshot)
     <base>/round=N/frontier_delta.parquet (ONLY links discovered round N)
     <base>/round=N/seen_delta.parquet     (ONLY surts first seen round N)
-    <base>/round=N/fetched.parquet        (per-round fetch output + lineage)
+    <base>/round=N/fetched.parquet        (per-round fetch output + lineage;
+                                           fetch_err = traceback of a payload
+                                           that failed, else null)
     <base>/round=N/manifest.json          (counts + per-stage timings;
                                            written last = commit marker)
     <base>/round=N/frontier.parquet ┐ full snapshots, written by compact()
@@ -32,6 +34,7 @@ from concurrent.futures import ThreadPoolExecutor
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hypercane_spark.errors import ERRORS_SCHEMA
 from hypercane_spark.streaming.storage import DEFAULT_STORE, ParquetStateStore
 
 # the merge aggregate per column; every other column takes first()
@@ -123,8 +126,34 @@ class RoundCheckpoint:
         )
 
     def read_fetched(self, spark: SparkSession, rnd: int) -> DataFrame:
-        return self.store.read_table(
-            spark, os.path.join(self._dir(rnd), "fetched.parquet")
+        """The round's fetched rows, as ``run()`` emitted them: a row whose
+        payload failed (``fetch_err`` set) is left to ``read_errors``."""
+        return (
+            self.store.read_table(
+                spark, os.path.join(self._dir(rnd), "fetched.parquet")
+            )
+            .where(F.col("fetch_err").isNull())
+            .drop("fetch_err")
+        )
+
+    def read_errors(self, spark: SparkSession) -> DataFrame:
+        """Payloads the crawl recorded and skipped in committed rounds, as
+        ``errors.ERRORS_SCHEMA`` rows. They live only in ``fetched.parquet``
+        (kept by ``compact``): a resumed crawl records each once."""
+        paths = [
+            os.path.join(self._dir(r), "fetched.parquet") for r in self.rounds()
+        ]
+        if not paths:
+            return spark.createDataFrame([], ERRORS_SCHEMA)
+        return (
+            self.store.read_table(spark, *paths)
+            .where(F.col("fetch_err").isNotNull())
+            .select(
+                F.col("urim").alias("uri"),
+                F.lit("fetch").alias("stage"),
+                F.col("fetch_err").alias("traceback"),
+                F.col("fetch_ts").alias("ts"),
+            )
         )
 
     def rounds(self) -> list[int]:

@@ -10,7 +10,8 @@ declarative DataFrame job:
             ──politeness: row_number over (host[, salt]) ordered by
               (priority desc, urim asc) ≤ per-host budget
             ──fetch: broadcast/shuffle join against the web/payload table,
-              lineage columns stamped (round, fetch_ts, partition_id)
+              lineage columns stamped (round, fetch_ts, partition_id);
+              a payload that fails verify is kept in fetch_err and skipped
             ──link extraction: explode(outlinks) → canonicalize (SURT)
             ──dedup vs seen ∪ selected → this round's LINK DELTA, appended
               to the frontier log; the next round's frontier is
@@ -154,6 +155,7 @@ class RoundMetrics:
     # so this is the number to drive DOWN; see BENCH.md round-5 jobs/round
     # table.
     jobs: int = 0
+    errors: int = 0  # payloads recorded and skipped (RoundCheckpoint.read_errors)
     timings: dict = field(default_factory=dict)
 
 
@@ -187,7 +189,6 @@ class CrawlEngine:
         images: DataFrame | None = None,
         checkpoint_dir: str | None = None,
         config: CrawlConfig | None = None,
-        errors_dir: str | None = None,
     ):
         self.spark = spark
         self.web = web
@@ -195,16 +196,6 @@ class CrawlEngine:
         self.images = images
         self.cfg = config or CrawlConfig()
         self.ckpt = RoundCheckpoint(checkpoint_dir or _temp_checkpoint_dir())
-        # errors_dir switches the fetch stage to the reference's skip-not-
-        # abort contract (errors.py:5-38): a payload that fails to decode/
-        # verify is recorded (uri, stage, traceback) and dropped; the crawl
-        # continues. Requires verify_payload (that's where decode happens).
-        if errors_dir:
-            from hypercane_spark.errors import ErrorStore
-
-            self.errors: "ErrorStore | None" = ErrorStore(errors_dir)
-        else:
-            self.errors = None
         self.metrics: list[RoundMetrics] = []
         # prefilter state, unused with seen_filter="exact". "bloom" is
         # OR-updated with each round's newly seen keys (blooms compose
@@ -361,6 +352,10 @@ class CrawlEngine:
         )
 
     def _fetch(self, selected: DataFrame, rnd: int) -> DataFrame:
+        """Selected rows + web row + payload + lineage. ``fetch_err`` holds
+        the traceback of a payload that failed verify, else null (always
+        null without verify), so every round's fetched table has one schema."""
+        err = F.lit(None).cast("string")
         fetched = selected.join(
             self.web.select(
                 "urim", "memento_datetime", "damage", "image_id", "outlinks"
@@ -394,23 +389,17 @@ class CrawlEngine:
                     payload_verify_udf,
                 )
 
-                capture = self.errors is not None
-                v = payload_verify_udf(
-                    psnr_sample_mod=self.cfg.psnr_sample_mod,
-                    capture_errors=capture,
-                )(
+                v = payload_verify_udf(psnr_sample_mod=self.cfg.psnr_sample_mod)(
                     F.col("image_id"), F.col("bytes"), F.col("phash")
                 )
-                fields = ["__v.phash_ok", "__v.psnr_db"] + (
-                    ["__v.err"] if capture else []
-                )
                 fetched = fetched.withColumn("__v", v).select(
-                    "*", *fields
-                ).drop("__v")
-                if capture:
-                    fetched = fetched.withColumnRenamed("err", "fetch_err")
+                    "*", "__v.phash_ok", "__v.psnr_db"
+                )
+                err = F.col("__v.err")
         return (
-            fetched.withColumn("round", F.lit(rnd))
+            fetched.withColumn("fetch_err", err)
+            .drop("__v")
+            .withColumn("round", F.lit(rnd))
             .withColumn("fetch_ts", F.current_timestamp())
             .withColumn("http_status", F.lit(200))
             .withColumn("partition_id", F.spark_partition_id())
@@ -538,38 +527,22 @@ class CrawlEngine:
         column at the scan, so ~20 KB/row of pixels never sits in executor
         memory (persisting them as JVM objects caused round-0 GC storms).
 
-        The fetched count rides the write job as an observe() metric — no
-        separate count job. selected ⊆ web, so |fetched| == |selected|
-        (inner join on urim; payload join is left)."""
+        Record and skip (reference errors.py:5-38): a failed payload's row
+        commits with the round (``RoundCheckpoint.read_errors``) and drops
+        out of the returned view; its surt is still seen, never retried.
+
+        Both counts ride the write job as observe() metrics — no count job.
+        selected ⊆ web, so |fetched| + errors == |selected| (inner join on
+        urim; payload join is left)."""
         t = time.time()
         fetched_full = self._fetch(selected.drop("__surt"), rnd)
         obs = Observation()
-        obs_metrics = [F.count(F.lit(1)).alias("n")]
-        if "fetch_err" in fetched_full.columns:
-            obs_metrics.append(
-                F.sum(F.col("fetch_err").isNotNull().cast("long")).alias("n_err")
-            )
-        self.ckpt.write_fetched(rnd, fetched_full.observe(obs, *obs_metrics))
+        counts = [F.count(F.lit(1)).alias("n"), F.count("fetch_err").alias("n_err")]
+        self.ckpt.write_fetched(rnd, fetched_full.observe(obs, *counts))
         fetched = self.ckpt.read_fetched(self.spark, rnd)
-        if self.errors is not None and "fetch_err" in fetched.columns:
-            # skip-not-abort: poisoned payloads land in the errors table
-            # and drop out of the crawl output; their surts are still
-            # marked seen (via selected) so they are never retried — the
-            # reference's record-and-skip contract.
-            bad = fetched.where(F.col("fetch_err").isNotNull())
-            self.errors.record(
-                bad.select(
-                    F.col("urim").alias("uri"),
-                    F.lit("fetch").alias("stage"),
-                    F.col("fetch_err").alias("traceback"),
-                )
-            )
-            fetched = fetched.where(F.col("fetch_err").isNull()).drop(
-                "fetch_err"
-            )
         row = obs.get  # dict of observed metrics
-        n_err = int(row.get("n_err") or 0) if self.errors else 0
-        m.fetched = int(row["n"]) - n_err
+        m.errors = int(row["n_err"])
+        m.fetched = int(row["n"]) - m.errors
         m.timings["fetch"] = time.time() - t
         return fetched
 
@@ -654,7 +627,8 @@ class CrawlEngine:
                 rnd,
                 links,
                 delta,
-                {"candidates": m.candidates, "fetched": m.fetched, "timings": m.timings},
+                dict(candidates=m.candidates, fetched=m.fetched,
+                     errors=m.errors, timings=m.timings),
             )
             fut_f.result()
             fut_w.result()

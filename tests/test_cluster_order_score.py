@@ -53,6 +53,36 @@ def test_dbscan_simhash_groups_near_dups(spark, mementos):
     assert out.count() == mementos.count()
 
 
+@pytest.mark.parametrize(
+    "prior, kw, digest, n_labels, n_noise",
+    [
+        # eps=None: per-group knee of the sorted 2-NN distances
+        (True, {}, "11a60c259b00474c3ee3254dc38dbf54", 19, 74),
+        (False, {}, "6aedd9d56abf26bffb99a73a993972b5", 34, 20),
+        (True, {"eps": 0.05, "min_samples": 3},
+         "6105032f76b2dd1afa226ae2e6a5bf8b", 14, 13),
+    ],
+)
+def test_dbscan_mdt_labels_pinned(spark, mementos, prior, kw, digest, n_labels, n_noise):
+    """dbscan_mdt's labels on the fixture, pinned by an md5 of the sorted
+    (urim, cluster) pairs: with the prior cluster (one fit per group,
+    composed as 'prior~~~label') and without (one global fit)."""
+    import hashlib
+
+    df = mementos if prior else mementos.drop("cluster")
+    got = sorted(
+        (r["urim"], r["cluster"])
+        for r in C.dbscan_mdt(df, **kw).select("urim", "cluster").collect()
+    )
+    assert len(got) == mementos.count()
+    if prior:
+        before = {r["urim"]: r["cluster"] for r in mementos.select("urim", "cluster").collect()}
+        assert all(c.startswith(before[u] + "~~~") for u, c in got)
+    labels = [c.split("~~~")[-1] for _, c in got]
+    assert (len(set(labels)), labels.count("-1")) == (n_labels, n_noise)
+    assert hashlib.md5(repr(got).encode()).hexdigest() == digest
+
+
 def test_order_memento_datetime_desc(spark, mementos):
     out = O.by_memento_datetime(mementos)
     rows = out.orderBy("rank").select("memento_datetime").collect()

@@ -73,12 +73,9 @@ def test_decode_stats_poisoned_row_recorded_not_aborting(spark, tmp_path):
         decode_stats(df).collect()
 
 
-def test_crawl_fetch_errors_skip_not_abort(spark, tmp_path):
-    """A poisoned image payload in the web: its row lands in the errors
-    table, the crawl completes, the fetched output excludes it, and its
-    surt is still marked seen (never retried)."""
-    from hypercane_spark.errors import ErrorStore
-    from hypercane_spark.streaming.frontier import CrawlConfig, CrawlEngine
+def _poisoned_web(spark):
+    """Two mementos on one host; the second's image payload is garbage.
+    → (web, images)."""
     from hypercane_spark.synth import average_phash, decode_image, encode_image
 
     px = np.full((4, 4, 3), 9, dtype=np.uint8)
@@ -100,23 +97,78 @@ def test_crawl_fetch_errors_skip_not_abort(spark, tmp_path):
         "image_id string, bytes binary, w int, h int, fmt string, "
         "caption string, phash long",
     )
+    return web, images
+
+
+def test_crawl_fetch_errors_skip_not_abort(spark, tmp_path):
+    """A poisoned image payload in the web, default crawl config apart from
+    payload verify: its row is recorded in the checkpoint, the crawl
+    completes, the fetched output excludes it, and its surt is still
+    marked seen (never retried)."""
+    from hypercane_spark.streaming.frontier import CrawlConfig, CrawlEngine
+
+    web, images = _poisoned_web(spark)
     eng = CrawlEngine(
         spark,
         web,
         images=images,
         checkpoint_dir=str(tmp_path / "ck"),
-        errors_dir=str(tmp_path / "errors"),
         config=CrawlConfig(max_rounds=2, verify_payload=True),
     )
     fetched = eng.run(eng.seed_frontier(web.select("urim")))
     urims = sorted(r["urim"] for r in fetched.select("urim").collect())
     assert urims == ["https://a.example/m-0"]
-    errs = eng.errors.read(spark).collect()
+    errs = eng.ckpt.read_errors(spark).collect()
     assert [e["uri"] for e in errs] == ["https://a.example/m-1"]
     assert errs[0]["stage"] == "fetch"
     # the errored surt is seen: round 2 selected nothing (no retry)
     _, _, seen = eng.ckpt.read(spark)
     assert seen.count() == 2
+
+
+def test_crawl_fetch_error_recorded_once_across_crash_and_resume(spark, tmp_path):
+    """A crawl killed at round 0's commit marker, after its fetched rows
+    (poisoned payload included) were written, then resumed by a default
+    engine: the error commits with the re-run round, so it is read back
+    exactly once, and the round's manifest counts it."""
+    import json
+
+    from hypercane_spark.streaming.checkpoint import RoundCheckpoint
+    from hypercane_spark.streaming.frontier import CrawlConfig, CrawlEngine
+    from hypercane_spark.streaming.storage import ParquetStateStore
+
+    class CrashAtFirstManifest(ParquetStateStore):
+        def put_manifest(self, path, data):
+            raise RuntimeError("crash at round 0's manifest")
+
+    web, images = _poisoned_web(spark)
+    base = str(tmp_path / "ck")
+    cfg = CrawlConfig(max_rounds=2, verify_payload=True)
+    cut = CrawlEngine(spark, web, images=images, checkpoint_dir=base, config=cfg)
+    cut.ckpt = RoundCheckpoint(base, store=CrashAtFirstManifest())
+    with pytest.raises(RuntimeError, match="crash at round 0"):
+        cut.run(cut.seed_frontier(web.select("urim")))
+
+    eng = CrawlEngine(spark, web, images=images, checkpoint_dir=base, config=cfg)
+    fetched = eng.run(eng.seed_frontier(web.select("urim")), resume=True)
+    assert [r["urim"] for r in fetched.select("urim").collect()] == [
+        "https://a.example/m-0"
+    ]
+    errs = eng.ckpt.read_errors(spark).collect()
+    assert [(e["uri"], e["stage"]) for e in errs] == [
+        ("https://a.example/m-1", "fetch")
+    ]
+    assert "Traceback" in errs[0]["traceback"] and errs[0]["ts"] is not None
+    # rebuilding the output from committed rounds gives what run() emitted
+    rebuilt = eng.ckpt.read_fetched(spark, 0)
+    assert "fetch_err" not in rebuilt.columns
+    assert [r["urim"] for r in rebuilt.select("urim").collect()] == [
+        "https://a.example/m-0"
+    ]
+    _, _, seen = eng.ckpt.read(spark)
+    assert seen.count() == 2
+    with open(os.path.join(base, "round=0", "manifest.json")) as f:
+        assert (json.load(f)["errors"], eng.metrics[0].errors) == (1, 1)
 
 
 # ---------------------------------------------------------- timemap fetch
